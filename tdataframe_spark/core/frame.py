@@ -255,7 +255,8 @@ class Frame:
     # -- lazy scalar actions (A1-A4 + Sum) --------------------------------
     def _scalar(self, col: str | None, kind: str, empty: str = "null") -> Result:
         exprs, finish = scalar_agg_plan(self._df, col, kind, empty)
-        return self._engine.book_scalar(self._df, exprs, finish)
+        cols = () if col is None else (col,)
+        return self._engine.book_scalar(self._df, cols, exprs, finish)
 
     def count(self) -> Result:
         return self._scalar(None, "count")
@@ -303,7 +304,8 @@ class Frame:
         routes out-of-range values to the flow bins)."""
         from tdataframe_spark.core.histogram import (
             bin_rows,
-            histo_edges_frame,
+            check_edges,
+            histo_edges_rows,
             resolve_auto_range,
         )
 
@@ -315,14 +317,15 @@ class Frame:
                 "every value; variable edges carry their own bounds)"
             )
 
+        # every histogram here is ONE grouped count (<= one row per bin)
+        # collected and zero-filled on the driver (histogram.py)
         if edges is not None:
-            def run_edges(df: DataFrame) -> list[tuple[int, float, float, int]]:
-                return [
-                    (r["bin"], r["bin_lo"], r["bin_hi"], r["cnt"])
-                    for r in histo_edges_frame(df, c, edges).collect()
-                ]
+            edges = check_edges(edges)
 
-            return self._engine.book_job(self._df, run_edges, full_scan=True)
+            def run_edges(df: DataFrame) -> list[tuple[int, float, float, int]]:
+                return histo_edges_rows(df, c, edges)
+
+            return self._engine.book_job(self._df, (c,), run_edges, full_scan=True)
 
         if hi > lo:  # fixed range: the bucketize pass is the only pass
             def run(df: DataFrame) -> list[tuple[int, float, float, int]]:
@@ -330,12 +333,12 @@ class Frame:
 
             # a histogram consumes every frame row → it can carry piggybacked
             # observe() metrics for scalar actions booked on the same frame
-            return self._engine.book_job(self._df, run, full_scan=True)
+            return self._engine.book_job(self._df, (c,), run, full_scan=True)
 
         # auto-range: book the min/max prepass as FUSABLE scalar actions so
         # it shares the frame's single agg()/observe pass with every other
-        # booked scalar (count/mean/...). The bucketize job then reads the
-        # published bounds — auto-histo + N scalars = exactly 2 jobs.
+        # booked scalar (count/mean/...); the bucketize job then reads the
+        # published bounds (job counts per flush: core/proxy.py)
         res_min = self._scalar(c, "min")
         res_max = self._scalar(c, "max")
 
@@ -347,7 +350,7 @@ class Frame:
 
         # NOT full_scan: this job must never be the observe carrier — its
         # input range depends on the scalar pass having already run
-        return self._engine.book_job(self._df, run_auto, full_scan=False)
+        return self._engine.book_job(self._df, (c,), run_auto, full_scan=False)
 
     def histo_frame(
         self,
@@ -392,14 +395,12 @@ class Frame:
         bucketize + ≤nx·ny-key hash-aggregate shape as ``histo``; a
         full-scan action, so it can carry piggybacked observe() metrics
         like the 1-D fixed path."""
-        from tdataframe_spark.core.histogram import histo2d_frame
+        from tdataframe_spark.core.histogram import histo2d_rows
 
         def run(df: DataFrame) -> list[tuple]:
-            return [tuple(r) for r in histo2d_frame(
-                df, xcol, ycol, nx, xlo, xhi, ny, ylo, yhi
-            ).collect()]
+            return histo2d_rows(df, xcol, ycol, nx, xlo, xhi, ny, ylo, yhi)
 
-        return self._engine.book_job(self._df, run, full_scan=True)
+        return self._engine.book_job(self._df, (xcol, ycol), run, full_scan=True)
 
     # -- take (A6) --------------------------------------------------------
     def take(self, col: str | None = None, limit: int | None = None) -> Result:
@@ -417,7 +418,7 @@ class Frame:
 
         # an unbounded take consumes every row (can carry observe metrics);
         # a limited take short-circuits, so it must not
-        return self._engine.book_job(self._df, run, full_scan=limit is None)
+        return self._engine.book_job(self._df, (c,), run, full_scan=limit is None)
 
     def take_iter(self, col: str | None = None, prefetch: bool = False):
         """Streaming Take for results too big to hold driver-side at once:
@@ -798,7 +799,9 @@ class Frame:
         """HyperLogLog distinct-count estimate (scale path where exact
         count-distinct would shuffle every value)."""
         exprs = {"v": F.approx_count_distinct(col, rsd=rsd)}
-        return self._engine.book_scalar(self._df, exprs, lambda r: int(r["v"]))
+        return self._engine.book_scalar(
+            self._df, (col,), exprs, lambda r: int(r["v"])
+        )
 
     def with_defaults(self, *cols: str) -> "Frame":
         """Return a frame with a new default-column list (reference ctor's

@@ -10,21 +10,41 @@ Reference parity (SURVEY.md §2.1 X1, §3.1-3.3):
 
 Spark re-expression: booked whole-frame scalar aggregates on the same frame
 are fused into ONE ``df.agg(...)`` job (Spark's partial+final hash aggregate
-is the per-slot-partials + merge of the reference's kernels). Non-fusable
-actions (histograms, takes, foreach) run as their own jobs; when more than one
-job reads the same frame we ``persist()`` it for the duration of the flush so
-the shared upstream filter/define prefix is evaluated once — the Spark
-analogue of the reference's per-entry memoization across a forked graph
-(/root/reference/TDataFrame.hxx:1293-1306, :1220-1229).
+is the per-slot-partials + merge of the reference's kernels), or ride a
+full-scan job's ``observe()`` when the frame has one. Non-fusable actions
+(histograms, takes) run as their own jobs.
+
+Every booking names the columns it reads (``cols``). When a flush needs
+more than one pass over a frame, the engine persists the projection
+``df.select(<booked columns, in frame order>)`` for the duration of the
+flush, so the shared upstream filter/define prefix is evaluated once and
+only what the bookings read is stored — the Spark analogue of the
+reference's per-entry memoization across a forked graph
+(/root/reference/TDataFrame.hxx:1293-1306, :1220-1229). Columns no booking
+reads are never computed by such a flush; there is no whole-frame persist.
+
+Job counts per flush, counted by job group on ``local[4]`` with AQE on
+(the session default; ``tests/test_frame_core.py`` pins them):
+- count + mean + fixed-range histo (one pass: the scalars ride the
+  histogram's ``observe()``): 2 jobs — the grouped count's shuffle-map
+  stage and its result stage, each a job under AQE.
+- the same + an auto-range histo (two passes over the persisted
+  projection): 5 jobs — 2 per grouped count (the fixed one carries
+  count/mean/min/max), plus 1 that builds the cache. Under AQE a cached
+  relation is materialized as its own query stage, hence its own job:
+  a grouped count over a persisted frame runs 3 jobs while the cache is
+  cold and 2 once it is built (with AQE off, 1 and 1).
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass, field
-from typing import Any, Callable
+from typing import Any, Callable, Sequence
 
 from pyspark.sql import Column, DataFrame
 from pyspark.storagelevel import StorageLevel
+
+from tdataframe_spark.core.errors import UnknownColumnError
 
 
 class Result:
@@ -80,6 +100,7 @@ class _ScalarAction:
     """A fusable whole-frame aggregate: named expressions + a finisher."""
 
     df: DataFrame
+    cols: tuple[str, ...]
     exprs: dict[str, Column]
     finish: Callable[[dict[str, Any]], Any]
     result: Result = field(repr=False, default=None)  # type: ignore[assignment]
@@ -97,9 +118,19 @@ class _JobAction:
     """
 
     df: DataFrame
+    cols: tuple[str, ...]
     run: Callable[[DataFrame], Any]
     full_scan: bool = False
     result: Result = field(repr=False, default=None)  # type: ignore[assignment]
+
+
+def _known(df: DataFrame, cols: Sequence[str]) -> tuple[str, ...]:
+    missing = [c for c in cols if c not in df.columns]
+    if missing:
+        raise UnknownColumnError(
+            f"unknown column(s) {missing}; available: {df.columns}"
+        )
+    return tuple(cols)
 
 
 class Engine:
@@ -110,24 +141,28 @@ class Engine:
         self._jobs: list[_JobAction] = []
 
     # -- booking ---------------------------------------------------------
+    # ``cols``: the columns of ``df`` the action reads, and the only ones a
+    # multi-pass flush persists for it (``()`` for a bare row count)
     def book_scalar(
         self,
         df: DataFrame,
+        cols: Sequence[str],
         exprs: dict[str, Column],
         finish: Callable[[dict[str, Any]], Any],
     ) -> Result:
         res = Result(self)
-        self._scalars.append(_ScalarAction(df, exprs, finish, res))
+        self._scalars.append(_ScalarAction(df, _known(df, cols), exprs, finish, res))
         return res
 
     def book_job(
         self,
         df: DataFrame,
+        cols: Sequence[str],
         run: Callable[[DataFrame], Any],
         full_scan: bool = False,
     ) -> Result:
         res = Result(self)
-        self._jobs.append(_JobAction(df, run, full_scan, res))
+        self._jobs.append(_JobAction(df, _known(df, cols), run, full_scan, res))
         return res
 
     @property
@@ -193,10 +228,11 @@ class Engine:
             carrier = next((j for j in jobs if j.full_scan), None) if scalars else None
 
             n_passes = (1 if scalars and carrier is None else 0) + len(jobs)
-            persisted = False
-            if n_passes > 1:
+            persisted = n_passes > 1
+            if persisted:
+                read = {c for a in (*scalars, *jobs) for c in a.cols}
+                df = df.select(*[c for c in df.columns if c in read])
                 df.persist(StorageLevel.MEMORY_AND_DISK)
-                persisted = True
             try:
                 if carrier is not None:
                     from pyspark.sql import Observation

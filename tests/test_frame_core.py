@@ -202,38 +202,161 @@ def test_snapshot_partitioned(tmp_path, f1):
     assert pruned.count().get() == 5
 
 
+def _njobs(spark, group, fn) -> int:
+    """Spark jobs ``fn`` runs, counted through a job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, "")
+    try:
+        fn()
+    finally:
+        sc.setJobGroup(None, None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 def test_auto_histo_fuses_prepass(spark):
     """The auto-range histo's min/max prepass fuses into the frame's shared
     scalar-agg pass: booking count + mean alongside the histo adds ZERO
-    Spark jobs over a bare auto-histo (absolute counts are AQE-noisy, so
-    the assert is comparative), and all scalars resolve from that one
-    flush."""
-    sc = spark.sparkContext
+    Spark jobs over a bare auto-histo (the assert is comparative; absolute
+    counts are pinned by test_flush_job_counts), and all scalars resolve
+    from that one flush."""
     rows = [Row(b1=float(i)) for i in range(100)]
     df = spark.createDataFrame(rows)
 
-    def njobs(group, fn):
-        sc.setJobGroup(group, "")
-        try:
-            fn()
-        finally:
-            sc.setJobGroup(None, None)
-        return len(sc.statusTracker().getJobIdsForGroup(group))
-
     bare = Frame(df).filter("b1 >= 0")
-    n_bare = njobs("histo_bare", lambda: bare.histo("b1", nbins=10).get())
+    n_bare = _njobs(spark, "histo_bare", lambda: bare.histo("b1", nbins=10).get())
 
     fr = Frame(df).filter("b1 >= 0")
     h = fr.histo("b1", nbins=10)
     ct, me = fr.count(), fr.mean("b1")
     got = {}
-    n_fused = njobs("histo_fused", lambda: got.setdefault("h", h.get()))
+    n_fused = _njobs(spark, "histo_fused", lambda: got.setdefault("h", h.get()))
     assert ct.ready and me.ready
     assert ct.get() == 100 and me.get() == pytest.approx(49.5)
     hist = got["h"]
     assert sum(b[3] for b in hist) == 100
     assert hist[0][1] == 0.0 and hist[-1][2] == 99.0
     assert n_fused == n_bare, (n_fused, n_bare)
+
+
+def test_flush_job_counts(spark):
+    """Jobs per flush under AQE (the session default), counted by job
+    group. The fixed cut-flow shape (count + mean + fixed-range histo) is
+    one grouped count carrying the scalars: 2 jobs, its shuffle-map stage
+    and its result stage. The auto shape adds an auto-range histo of an
+    array column: 2 jobs per grouped count plus 1 that builds the
+    persisted projection (core/proxy.py)."""
+    assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
+    rows = [
+        Row(b1=float(i), n=i % 40, dv=[float(j) for j in range(i % 7)])
+        for i in range(200)
+    ]
+    df = spark.createDataFrame(rows)
+    for auto, want in ((False, 2), (True, 5)):
+        fr = Frame(df).filter("b1 >= 0", name="cut")
+        res = [fr.count(), fr.mean("n"), fr.histo("n", nbins=40, lo=-0.5, hi=39.5)]
+        if auto:
+            res.append(fr.histo("dv", nbins=16))
+        assert _njobs(spark, f"flush_jobs_auto_{auto}", fr.engine.flush) == want
+        assert all(r.ready for r in res)
+        assert res[0].get() == 200
+        assert _njobs(spark, f"report_auto_{auto}", fr.report) == 0
+
+
+def test_multipass_flush_persists_only_booked_columns(spark):
+    """A multi-pass flush persists df.select(<booked columns, in frame
+    order>): a defined column no booking reads, which raises if it is
+    ever evaluated, never runs, and no RDD stays persisted afterwards."""
+    from pyspark.storagelevel import StorageLevel
+
+    sc = spark.sparkContext
+    before = set(sc._jsc.getPersistentRDDs().keySet().toArray())
+    df = spark.createDataFrame([Row(n=i % 5, b1=float(i)) for i in range(50)])
+    boom = F.raise_error(F.lit("unbooked column evaluated"))
+    fr = Frame(df).define("boom", F.when(F.col("b1") >= 0, boom))
+    me, ct = fr.mean("b1"), fr.count()
+    h = fr.histo("n", nbins=5)  # auto range: a second pass, so a persist
+    seen = {}
+
+    def probe(d):
+        seen["cols"] = d.columns
+        seen["persisted"] = d.storageLevel != StorageLevel.NONE
+        seen["rdds"] = not sc._jsc.getPersistentRDDs().isEmpty()
+
+    fr.engine.book_job(fr.df, (), probe)
+    assert ct.get() == 50 and me.get() == pytest.approx(24.5)
+    assert [b[3] for b in h.get()] == [10] * 5
+    assert seen == {"cols": ["n", "b1"], "persisted": True, "rdds": True}
+    # other modules of the session may hold caches of their own: compare
+    # against the set before the flush rather than asserting isEmpty()
+    assert set(sc._jsc.getPersistentRDDs().keySet().toArray()) == before
+    with pytest.raises(Exception, match="unbooked column evaluated"):
+        fr.select("boom").df.collect()  # the guard column does raise
+    with pytest.raises(UnknownColumnError):
+        fr.engine.book_job(fr.df, ("nope",), probe)
+
+
+def _bits(rows):
+    """Rows with every float replaced by its IEEE bit pattern."""
+    import struct
+
+    return [
+        tuple(struct.pack(">d", v) if isinstance(v, float) else v for v in r)
+        for r in rows
+    ]
+
+
+@pytest.fixture(scope="module")
+def parity_df(spark):
+    import random
+
+    rnd = random.Random(7)
+    xs = [rnd.uniform(-0.2, 1.2) for _ in range(300)]
+    xs += [0.1, 0.3, 0.5, 0.7, 0.6999999999999999, 1.0, 0.0, None]
+    ys = [rnd.uniform(-1.2, 1.2) for _ in xs]
+    arr = [[x, x / 2] if x is not None else [] for x in xs]
+    return spark.createDataFrame(
+        list(zip(xs, ys, arr)), "x double, y double, a array<double>"
+    )
+
+
+@pytest.mark.parametrize(
+    "case",
+    [
+        dict(col="x", nbins=10, lo=0.0, hi=1.0),
+        dict(col="x", nbins=7, lo=0.0, hi=0.7, flow=True),
+        dict(col="x", nbins=3, lo=0.1, hi=0.7),  # the width rounds
+        # lo + 5 * width == 0.29999999999999993: the last edge rounds,
+        # and flow mode pins it to hi
+        dict(col="x", nbins=5, lo=0.1, hi=0.3),
+        dict(col="x", nbins=5, lo=0.1, hi=0.3, flow=True),
+        dict(col="x", nbins=13),  # auto range
+        dict(col="a", nbins=9),  # auto range over flattened arrays
+        dict(col="x", nbins=4, where="x = 0.5"),  # auto, min == max
+        dict(col="x", nbins=4, where="x > 99"),  # auto, empty frame
+        dict(col="x", edges=[-0.1, 0.1, 0.35, 0.7, 1.0]),
+    ],
+    ids=["fixed", "flow", "round", "round_edge", "round_edge_flow", "auto",
+         "auto_array", "auto_degenerate", "auto_empty", "edges"],
+)
+def test_histo_matches_histo_frame_bit_for_bit(parity_df, case):
+    """Frame.histo (grouped count zero-filled on the driver) returns
+    exactly the rows of the DataFrame builder, edges bit for bit."""
+    case = dict(case)
+    df = parity_df.filter(case.pop("where")) if "where" in case else parity_df
+    lazy = Frame(df).histo(**case).get()
+    frame = [tuple(r) for r in Frame(df).histo_frame(**case).collect()]
+    assert _bits(lazy) == _bits(frame)
+    assert all(type(r[3]) is int for r in lazy)
+
+
+def test_histo2d_matches_histo2d_frame_bit_for_bit(parity_df):
+    from tdataframe_spark.core.histogram import histo2d_frame
+
+    args = ("x", "y", 3, 0.1, 0.7, 4, -1.0, 1.0)
+    lazy = Frame(parity_df).histo2d(*args).get()
+    frame = [tuple(r) for r in histo2d_frame(parity_df, *args).collect()]
+    assert len(lazy) == 12 and sum(r[-1] for r in lazy) > 0
+    assert _bits(lazy) == _bits(frame)
 
 
 def test_histo_variable_edges(spark):

@@ -130,11 +130,14 @@ def build_rollup_txn(
     bucket_us: int = HOUR_US,
     group_cols: list[str] | None = None,
     meta: dict | None = None,
+    app_id: str | None = None,
+    app_version: int | None = None,
 ) -> int:
     """Materialize the rollup state as a transactional manifest table
     (``sources/txn.py``), day-partitioned. One atomic commit; ``meta``
-    (e.g. the streaming sink's applied-batch id) rides it. Refuses to
-    shadow an existing plain-directory rollup — that state would silently
+    rides it, and ``app_id``/``app_version`` (the streaming sink's
+    writer id and batch id) make it idempotent as in ``txn_write``.
+    Refuses to shadow an existing plain-directory rollup — that state would silently
     vanish from the manifest view."""
     import os
 
@@ -149,7 +152,8 @@ def build_rollup_txn(
         )
     parts = _partials(events, value_col, bucket_us, group_cols or [])
     return txn_write(
-        parts, path, mode="overwrite", partition_by=["day"], meta=meta
+        parts, path, mode="overwrite", partition_by=["day"], meta=meta,
+        app_id=app_id, app_version=app_version,
     )
 
 
@@ -160,6 +164,8 @@ def refresh_rollup_txn(
     bucket_us: int = HOUR_US,
     group_cols: list[str] | None = None,
     meta: dict | None = None,
+    app_id: str | None = None,
+    app_version: int | None = None,
 ) -> list[int]:
     """Merge a new batch into a transactional rollup. Reads ONLY the
     touched days' FILES (manifest-level pruning — no directory listing at
@@ -167,7 +173,9 @@ def refresh_rollup_txn(
     ``replace_where`` manifest — unlike the dynamic-partition-overwrite
     path there is no crash instant with some days refreshed and others
     not, and no localCheckpoint is needed (new files never overwrite the
-    files being read). Returns the refreshed day list."""
+    files being read). ``app_id``/``app_version`` are forwarded to
+    ``txn_write``, so a replayed batch commits nothing. Returns the
+    refreshed day list."""
     from tdataframe_spark.sources.txn import txn_read, txn_write
 
     spark = new_events.sparkSession
@@ -187,6 +195,8 @@ def refresh_rollup_txn(
         partition_by=["day"],
         replace_where={"day": days},
         meta=meta,
+        app_id=app_id,
+        app_version=app_version,
     )
     return sorted(days)
 

@@ -316,8 +316,9 @@ def compact_txn(
     rmtree-then-rename (which has a crash instant with the live copy
     gone, and breaks concurrent readers mid-scan): here old files stay on
     disk until ``txn_vacuum``, so snapshot-pinned readers keep working
-    through the compaction — the lakehouse OPTIMIZE shape. Returns the
-    new file count.
+    through the compaction — the lakehouse OPTIMIZE shape. The commit
+    meta carries ``data_change: false`` (rows unchanged), so change
+    feeds and ``txn_readstream`` skip it. Returns the new file count.
 
     ``sort_by`` range-clusters on one key prefix (tight per-file min/max
     on those columns → row-group pruning); ``zorder_by`` is Delta's
@@ -423,7 +424,8 @@ def compact_txn(
             mode="append",
             partition_by=partition_by or None,
             meta={
-                **(meta or {}), "compaction": True, "source_version": version,
+                **(meta or {}), "compaction": True, "data_change": False,
+                "source_version": version,
             },
             expected_version=version,
             stats_cols=stats_cols or None,
@@ -447,7 +449,10 @@ def compact_txn(
         path,
         mode="overwrite",
         partition_by=partition_by or None,
-        meta={**(meta or {}), "compaction": True, "source_version": version},
+        meta={
+            **(meta or {}), "compaction": True, "data_change": False,
+            "source_version": version,
+        },
         expected_version=version,
         stats_cols=stats_cols or None,
         bloom_cols=bloom_cols,

@@ -40,11 +40,16 @@ compressed columnar file instead of parsing one giant JSON string.
   retries. Appends therefore never lose data under concurrent writers.
   Conflicting ``replace_where`` on the same partition is last-wins by
   default; pass ``expected_version`` for strict compare-and-swap.
-* **Exactly-once for streaming folds** — commit ``meta`` carries the
-  applied micro-batch id atomically WITH the state change, closing the
-  swap-then-marker window the ``_staged_swap`` sinks disclosed
-  (streaming applies batches in order, so the latest manifest's batch
-  id is a sufficient replay fence).
+* **Exactly-once for streaming folds** — every stream writer (the
+  native ``txn_table`` sink and the foreachBatch fold sinks) commits
+  with ``app_id``/``app_version``: the writer's checkpoint id and the
+  micro-batch id. Every manifest carries the per-app watermark
+  (``apps``, Delta's SetTransaction), so the applied batch id becomes
+  visible atomically WITH the state change, and a replayed batch at or
+  below the head's watermark commits nothing. This closes the
+  swap-then-marker window the ``_staged_swap`` sinks disclosed; the
+  watermark rides the head, so no older manifest has to survive
+  ``txn_vacuum`` to keep it.
 
 Partition handling: ``partition_by`` columns are DUPLICATED into hive
 dirs (``__p_day=5``) so the real column stays in the data files —
@@ -112,10 +117,19 @@ def _load(path: str, version: int) -> dict:
     with the lists externalized), or an incremental delta ({'log':
     {add, remove, dv_add, dv_remove}}). Most callers want
     :func:`_materialize`, which reconstructs the complete snapshot
-    state in every case; meta-only consumers (history, fences, hints)
+    state in every case; meta-only consumers (history, hints)
     stay O(1) on all three forms."""
     with open(_manifest_path(path, version)) as f:
-        return json.load(f)
+        m = json.load(f)
+    if m.get("vacuumed"):
+        # older logs kept a vacuumed fence manifest with its files
+        # stripped; its snapshot is gone like any unlinked version
+        raise FileNotFoundError(
+            f"version {version} of {path} was vacuumed (a stamped "
+            "manifest of an older log format) — its data files are "
+            "reclaimed"
+        )
+    return m
 
 
 # Above this many state rows (files + dv entries) a checkpoint's lists
@@ -205,7 +219,7 @@ def _externalize_if_big(path: str, version: int, on_disk: dict) -> dict:
     0 disables), move files+dv to a parquet sidecar and return the
     O(meta) manifest carrying ``state_parquet``; otherwise return the
     manifest unchanged."""
-    if "files" not in on_disk or on_disk.get("vacuumed"):
+    if "files" not in on_disk:
         return on_disk
     try:
         thr = int(
@@ -235,11 +249,10 @@ def _dv_key(e) -> str:
 
 # Reconstructed snapshot states, keyed by (table abspath, version) and
 # validated against the manifest file's (mtime_ns, size) — manifests are
-# immutable once published EXCEPT when vacuum rewrites one in place
-# (stamping a fence / materializing the oldest retained version), which
-# changes the signature and misses the cache. Bounded: states share
-# entry dicts with each other, so the marginal cost per entry is one
-# list + one dict shell.
+# immutable once published EXCEPT when vacuum materializes the oldest
+# retained version in place, which changes the signature and misses the
+# cache. Bounded: states share entry dicts with each other, so the
+# marginal cost per entry is one list + one dict shell.
 from collections import OrderedDict as _OrderedDict
 
 _STATE_CACHE: _OrderedDict = _OrderedDict()
@@ -272,7 +285,7 @@ def _materialize(path: str, version: int, raw: dict | None = None) -> dict:
     every commit in full, so only files/dv need replay."""
     def _copy(state: dict) -> dict:
         # defensive shell copy: callers may extend/replace the lists
-        # (vacuum stamps fences; writers build live sets) — the cached
+        # (writers build live sets) — the cached
         # state and its entry dicts stay shared and untouched
         out = dict(state)
         out["files"] = list(state.get("files", []))
@@ -365,13 +378,10 @@ def txn_latest(path: str) -> tuple[int, dict | None]:
     GET and a LIST over thousands of commit files per read.
 
     The forward probe assumes manifests are CONTIGUOUS above the hint.
-    ``txn_vacuum`` breaks contiguity when it retains an out-of-window
-    streaming-fence manifest while deleting its neighbours — a stale
-    hint landing on the fence would probe fence→(deleted)→"head". Two
-    guards close that: vacuum stamps every retained out-of-window
-    manifest ``retained_fence`` (and refreshes the hint to the true
-    head), and a probe that LANDS on a stamped-or-vacuumed manifest
-    distrusts the hint and falls back to the listing."""
+    ``txn_vacuum`` keeps that true: it unlinks every manifest below its
+    window and nothing above it, so a hint at a surviving version
+    probes to the real head, and a hint at an unlinked one falls back
+    to the listing."""
     hint = None
     try:
         with open(_hint_path(path)) as f:
@@ -382,11 +392,7 @@ def txn_latest(path: str) -> tuple[int, dict | None]:
         v = hint
         while os.path.exists(_manifest_path(path, v + 1)):
             v += 1
-        m = _load(path, v)
-        if not (m.get("vacuumed") or m.get("retained_fence")):
-            return v, _materialize(path, v, raw=m)
-        # probe landed on a vacuum survivor below a manifest gap: the
-        # real head is above the gap — only the listing can find it
+        return v, _materialize(path, v)
     vs = _versions(path)
     if not vs:
         return 0, None
@@ -433,7 +439,7 @@ def _commit_form(path: str, version: int, manifest: dict) -> dict:
     not the live set (the Delta _delta_log / Iceberg manifest-list
     idea), while :func:`_materialize` reconstructs complete snapshots
     from checkpoint + suffix on read."""
-    if "files" not in manifest or manifest.get("vacuumed"):
+    if "files" not in manifest:
         return manifest
     try:
         interval = int(
@@ -448,10 +454,6 @@ def _commit_form(path: str, version: int, manifest: dict) -> dict:
     try:
         parent = _materialize(path, version - 1)
     except FileNotFoundError:
-        return manifest
-    if parent.get("vacuumed"):
-        # a vacuumed fence has no file list to diff against — the next
-        # real commit above it must re-anchor the chain as a checkpoint
         return manifest
     pf = {f["path"]: f for f in parent.get("files", [])}
     nf = {f["path"]: f for f in manifest["files"]}
@@ -1086,8 +1088,6 @@ def _commit_file_delta(path: str, version: int, raw: dict):
     try:
         pm = _materialize(path, version - 1) if version > 1 else None
     except FileNotFoundError:
-        return None
-    if pm is not None and pm.get("vacuumed"):
         return None
     before = {f["path"] for f in (pm or {}).get("files", [])}
     after_files = m.get("files", [])
@@ -1923,9 +1923,8 @@ def _resolve_snapshot(
 ) -> tuple[int, dict]:
     """Resolve (version, manifest) for a snapshot read: the latest, a
     pinned ``version``, or the newest commit at or before unix-seconds
-    ``as_of`` (time travel). Vacuumed manifests raise — their data files
-    are reclaimed (the manifest survives only as a streaming replay
-    fence)."""
+    ``as_of`` (time travel). A vacuumed version raises
+    ``FileNotFoundError`` — its manifest is unlinked."""
     if version is not None and as_of is not None:
         raise ValueError("pass version OR as_of, not both")
     if as_of is not None:
@@ -1938,12 +1937,7 @@ def _resolve_snapshot(
             # tables would be unreachable by any as_of
             return os.path.getmtime(_manifest_path(path, v))
 
-        eligible = [
-            v for v in _versions(path)
-            # vacuumed manifests keep their meta (replay fence) but their
-            # data files are gone — time travel must not resolve to them
-            if not _load(path, v).get("vacuumed") and _commit_ts(v) <= as_of
-        ]
+        eligible = [v for v in _versions(path) if _commit_ts(v) <= as_of]
         if not eligible:
             raise FileNotFoundError(
                 f"no commit at or before ts={as_of} in {path}"
@@ -1955,13 +1949,6 @@ def _resolve_snapshot(
             raise FileNotFoundError(f"no transactional table at {path}")
     else:
         manifest = _materialize(path, version)
-    if manifest.get("vacuumed"):
-        raise FileNotFoundError(
-            f"version {version} of {path} was vacuumed — its data files "
-            "are reclaimed (the manifest survives only as a streaming "
-            "replay fence); re-run vacuum with a longer retention if "
-            "readers need this snapshot"
-        )
     return version, manifest
 
 
@@ -2223,13 +2210,6 @@ def txn_changes(
         to_version, _ = txn_latest(path)
     from_manifest = _materialize(path, from_version) if from_version else None
     after_manifest = _materialize(path, to_version)
-    for v, m in ((from_version, from_manifest), (to_version, after_manifest)):
-        if m is not None and m.get("vacuumed"):
-            raise ValueError(
-                f"version {v} of {path} was vacuumed — its file list is "
-                "gone, so the change feed from it would report every live "
-                "row as an insert; restart the consumer from a full snapshot"
-            )
     before = {f["path"] for f in from_manifest["files"]} if from_manifest else set()
     after = {f["path"] for f in after_manifest["files"]}
     # manifest-relative key -> filesystem path (shallow-cloned entries
@@ -2371,6 +2351,8 @@ def txn_change_feed(
       committed while cdf was off): per-commit snapshot diff fallback
       (updates appear as plain delete+insert pairs there — pre/post
       labels need recorded files).
+    * Purge and OPTIMIZE commits (``data_change: false``): nothing —
+      they rewrite files without changing rows.
 
     Columns present under ``to_version``'s logical names (physical
     names are version-stable, so renames resolve; columns added later
@@ -2380,10 +2362,6 @@ def txn_change_feed(
     if to_version is None:
         to_version, _ = txn_latest(path)
     to_state = _materialize(path, to_version)
-    if to_state.get("vacuumed"):
-        raise ValueError(
-            f"version {to_version} of {path} was vacuumed — no feed"
-        )
     to_schema = StructType.fromJson(json.loads(to_state["schema"]))
     to_pschema = _physical_schema(to_schema)
 
@@ -2402,11 +2380,8 @@ def txn_change_feed(
     out = None
     for v in range(from_version + 1, to_version + 1):
         raw = _load(path, v)  # FileNotFoundError: vacuumed away — loud
-        if raw.get("vacuumed"):
-            raise ValueError(
-                f"commit {v} of {path} was vacuumed — its changes are "
-                "gone; restart the consumer from a full snapshot"
-            )
+        if raw.get("meta", {}).get("data_change") is False:
+            continue  # purge/OPTIMIZE: files rewritten, rows unchanged
         state = _materialize(path, v, raw=raw)
         vschema = StructType.fromJson(json.loads(state["schema"]))
         if raw.get("cdf"):
@@ -3385,6 +3360,8 @@ def txn_purge(
     Surviving rows are rewritten under the table's partitioning, stats
     columns are recomputed for the new files, and DV entries whose
     referenced files were all rewritten are dropped from the manifest.
+    The commit meta carries ``data_change: false`` (rows unchanged), so
+    change feeds and ``txn_readstream`` skip it.
     Returns the committed version (the current one when nothing
     qualifies)."""
     import shutil
@@ -3485,7 +3462,7 @@ def txn_purge(
             "files": kept + new_files,
             "schema": manifest["schema"],
             "dv": new_dv,
-            "meta": {**(meta or {}), "op": "purge"},
+            "meta": {**(meta or {}), "op": "purge", "data_change": False},
         }
         # same retired-physical propagation as txn_delete: the purge
         # keeps non-rewritten files whose dropped columns must stay
@@ -3528,13 +3505,8 @@ def txn_restore(
     vacuumed (its files are gone — nothing to restore), and retries the
     manifest race like any commit (the target snapshot is absolute, so
     a retry cannot change what is being restored)."""
-    src = _materialize(path, version)  # FileNotFoundError if never existed
-    if src.get("vacuumed"):
-        raise FileNotFoundError(
-            f"version {version} of {path} was vacuumed — its data files "
-            "are reclaimed; restore is only possible within the vacuum "
-            "retention window"
-        )
+    # FileNotFoundError if never existed or vacuumed away
+    src = _materialize(path, version)
     for _ in range(max_retries):
         head, _latest = txn_latest(path)
         manifest = {
@@ -4316,16 +4288,16 @@ def txn_drop_app(path: str, app_id: str, max_retries: int = 50) -> int:
 def txn_history(spark: SparkSession, path: str) -> DataFrame:
     """DESCRIBE HISTORY: one row per retained commit, newest first —
     version, commit timestamp, operation (from the commit meta's ``op``,
-    with write/vacuum fences inferred), file/DV counts, and the full
-    meta as a JSON string. Driver-side manifest walk (O(#retained
-    commits) JSON reads — the audit surface, not a data path)."""
+    else inferred: restore, streaming batch or write), file/DV counts,
+    and the full meta as a JSON string. Driver-side manifest walk
+    (O(#retained commits) JSON reads — the audit surface, not a data
+    path)."""
     rows = []
     for v in reversed(_versions(path)):
         m = _materialize(path, v)
         meta = m.get("meta", {})
         op = meta.get("op") or (
-            "vacuum_fence" if m.get("vacuumed")
-            else "restore" if "restore_of" in meta
+            "restore" if "restore_of" in meta
             else "streaming_batch" if "batch_id" in meta
             else "write"
         )
@@ -4482,11 +4454,10 @@ def txn_vacuum(
                 # foreign (cloned) refs live under the SOURCE table and
                 # are that table's vacuum's concern, like its data files
                 live_bloom.add(os.path.normpath(b["ref"]))
-    # PASS 1 — decide what to reclaim, deleting NOTHING yet: the fence
-    # manifests below must be rewritten (files-invalid) BEFORE the dirs
-    # they reference disappear, or a crash between the two leaves a
-    # pinned/as_of read failing with path-not-found instead of the
-    # documented 'was vacuumed' error
+    # PASS 1 — decide what to reclaim, deleting NOTHING yet: the
+    # manifests below the window are unlinked BEFORE the dirs only they
+    # reference disappear, so no surviving manifest ever names a
+    # reclaimed file, whatever instant a crash hits
     to_remove = []
     now = time.time()
     data_root = os.path.join(path, "data")
@@ -4557,103 +4528,31 @@ def txn_vacuum(
         if age < min_age_s:
             continue
         to_remove.append(cdir)
-    # keep the newest manifest carrying a streaming sink's batch_id even
-    # when it falls outside the retained window: it is the replay fence
-    # AND the ownership record — deleting it after a non-sink commit
-    # (OPTIMIZE) took the head would let a crashed batch re-fold and a
-    # foreign checkpoint fold in (its data files may still be reclaimed;
-    # the fence only reads meta)
-    fence = next(
-        (v for v in reversed(vs) if "batch_id" in _load(path, v).get("meta", {})),
-        None,
-    )
-    # every manifest that SURVIVES this vacuum (the oldest retained one,
-    # and a retained out-of-window fence) must be self-contained BEFORE
-    # any older manifest is unlinked: with the incremental commit log it
-    # may be a delta whose chain roots below the window — materialize it
-    # to a full checkpoint in place (logical state unchanged; same
-    # atomic replace as the fence rewrites below). Doing this inside the
-    # unlink loop would be too late: an ascending unlink deletes the
-    # fence's ancestors before reaching it, and _materialize then fails
-    # FileNotFoundError forever (vacuum permanently broken).
-    def _rewrite_inplace(v: int, full: dict):
-        """Atomic in-place manifest rewrite, applying the SAME
-        externalization rule as _publish (a vacuum that materializes a
-        10^6-file delta must not inline the list the checkpoint format
-        exists to avoid)."""
-        full = _externalize_if_big(path, v, full)
-        tmp = os.path.join(path, _TXN, f".tmp-{uuid.uuid4().hex}")
-        with open(tmp, "w") as f:
-            json.dump(full, f)
-            f.flush()
-            os.fsync(f.fileno())
-        os.replace(tmp, _manifest_path(path, v))
-
+    # the oldest retained manifest must be self-contained BEFORE any
+    # older one is unlinked: with the incremental commit log it may be a
+    # delta whose chain roots below the window — materialize it to a
+    # full checkpoint in place (logical state unchanged; the same
+    # externalization rule as _publish, so a 10^6-file delta does not
+    # inline the list the parquet checkpoint exists to avoid)
     if vs[:-keep_versions]:
-        for v in {keep[0], fence} - {None}:
-            raw_v = _load(path, v)
-            if "log" not in raw_v:
-                continue  # JSON/parquet checkpoints are self-contained
-            _rewrite_inplace(v, _materialize(path, v, raw=raw_v))
+        raw0 = _load(path, keep[0])
+        if "log" in raw0:
+            full = _externalize_if_big(
+                path, keep[0], _materialize(path, keep[0], raw=raw0)
+            )
+            tmp = os.path.join(path, _TXN, f".tmp-{uuid.uuid4().hex}")
+            with open(tmp, "w") as f:
+                json.dump(full, f)
+                f.flush()
+                os.fsync(f.fileno())
+            os.replace(tmp, _manifest_path(path, keep[0]))
     for v in vs[:-keep_versions]:
-        if v == fence:
-            # the fence only needs its meta; when its data files are no
-            # longer referenced by any retained manifest they are
-            # reclaimed above, so mark it files-invalid — as_of/version
-            # reads skip or error clearly instead of failing on missing
-            # files (files all still live → snapshot stays readable).
-            # EVERY retained out-of-window manifest is also stamped
-            # retained_fence: it sits below a manifest gap, so a stale
-            # version hint landing on it must not forward-probe to a
-            # false head (see txn_latest)
-            raw_m = _load(path, v)
-            m = _materialize(path, v, raw=raw_m)
-            fence_files = {os.path.normpath(f["path"]) for f in m["files"]}
-            fence_dv = {os.path.normpath(p) for p in _dv_paths(m.get("dv"))}
-            invalid = not m.get("vacuumed") and not (
-                fence_files <= live and fence_dv <= live_dv
-            )
-            # a still-valid PARQUET-checkpoint fence keeps its sidecar
-            # ref — meta-only stamps must not inline a huge file list
-            w = (
-                dict(raw_m)
-                if "state_parquet" in raw_m and not invalid
-                else m
-            )
-            # a retained DELTA fence must persist as a full manifest —
-            # the chain below it is about to be unlinked
-            changed = "log" in raw_m
-            # a fence whose DV files were reclaimed must ALSO go
-            # files-invalid: reading it without its deletion vectors
-            # would silently resurrect deleted rows
-            if invalid:
-                w["vacuumed"] = True
-                w["files"] = []
-                w["dv"] = []
-                w.pop("state_parquet", None)
-                changed = True
-            if w.get("cdf"):
-                # the fence only needs its meta; its change files are
-                # not referenced by any retained commit and are being
-                # reclaimed — a dangling list would crash the feed
-                w["cdf"] = []
-                changed = True
-            if not w.get("retained_fence"):
-                w["retained_fence"] = True
-                changed = True
-            if changed:
-                _rewrite_inplace(v, w)
-            continue
         os.unlink(_manifest_path(path, v))
-    # refresh the hint to the true head: vacuum may have deleted the
-    # manifest a stale hint pointed at, and the retained fence must not
-    # become anyone's probe start
-    _write_hint(path, vs[-1])
     # parquet-checkpoint sidecars referenced by NO surviving manifest
-    # (their manifest was unlinked, a fence went files-invalid, or a
-    # racer lost the publish) are reclaimed with the same age guard;
-    # decided here — after the unlink/fence rewrites settled the
-    # surviving reference set — and deleted in pass 2 with the rest
+    # (their manifest was unlinked, or a racer lost the publish) are
+    # reclaimed with the same age guard; decided here — after the
+    # unlinks settled the surviving reference set — and deleted in
+    # pass 2 with the rest
     txn_dir = os.path.join(path, _TXN)
     live_ckpt = set()
     for v in _versions(path):

@@ -25,8 +25,12 @@ Semantics (Delta parity):
   schema): files written before an additive evolution NULL-backfill;
   files written under column mapping resolve physical→logical, so a
   table renamed mid-history streams under its current names.
-* A VACUUUMED manifest inside the requested window always raises —
-  its data bytes are gone; restart from a retained version.
+* **Maintenance commits are skipped** — a purge or OPTIMIZE commit
+  (``data_change: false`` in its meta) changes no rows; both the append
+  feed and the CDC mode stream nothing for it (Delta's ``dataChange``).
+* A window that reaches a VACUUMED manifest (or needs one as a diff
+  baseline) always raises — its data bytes are gone; restart from a
+  retained version.
 
 Scale shape: planning is driver-side manifest JSON only (O(files
 touched), the same cost txn_read pays); row reads happen on EXECUTORS,
@@ -91,11 +95,6 @@ def _added_files(
     the materialized parent as before. ``raw`` lets a caller that
     already loaded the manifest skip the re-read."""
     m = raw if raw is not None else _load(path, version)
-    if m.get("vacuumed"):
-        raise ValueError(
-            f"version {version} of {path} was vacuumed — its data is "
-            "reclaimed; restart the stream from a retained version"
-        )
     if "log" in m:
         log = m["log"]
         added = list(log.get("add", []))
@@ -111,16 +110,6 @@ def _added_files(
         # commit's delta is unknowable — treating it as empty would
         # re-emit the table's whole cumulative file set as "added"
         # (every already-delivered row duplicated downstream)
-        raise ValueError(
-            f"commit {parent} of {path} (the baseline for commit "
-            f"{version}) was vacuumed away — restart the stream with "
-            f"start_version >= {version}"
-        )
-    if pm is not None and pm.get("vacuumed"):
-        # a vacuumed parent retained as a streaming FENCE still exists
-        # as a manifest but its files list was rewritten empty — using
-        # it as the baseline would count every cumulative file of this
-        # commit as "added" and silently re-emit the whole table
         raise ValueError(
             f"commit {parent} of {path} (the baseline for commit "
             f"{version}) was vacuumed away — restart the stream with "
@@ -265,14 +254,12 @@ class TxnStreamReader(DataSourceStreamReader):
                 f"start_version >= {max(gaps)}"
             )
         for v in range(start["version"] + 1, end["version"] + 1):
+            raw = _load(self.path, v)
+            if raw.get("meta", {}).get("data_change") is False:
+                # a purge or OPTIMIZE rewrites files without changing
+                # rows (Delta's dataChange=false): nothing to stream
+                continue
             if self.cdc:
-                raw = _load(self.path, v)
-                if raw.get("vacuumed"):
-                    raise ValueError(
-                        f"version {v} of {self.path} was vacuumed — its "
-                        "changes are gone; restart the stream from a "
-                        "retained version"
-                    )
                 if raw.get("cdf"):
                     # recorded change files ARE the commit's complete
                     # row-level change set — stream exactly those
@@ -300,7 +287,7 @@ class TxnStreamReader(DataSourceStreamReader):
                         kind="insert", version=v,
                     ))
                 continue
-            added, changed = _added_files(self.path, v)
+            added, changed = _added_files(self.path, v, raw=raw)
             if changed and not self.ignore_changes:
                 raise ValueError(
                     f"commit {v} of {self.path} removed or hid rows "
@@ -757,19 +744,28 @@ class _TxnWriterBase:
             })
         return entries
 
-    def _publish_append(self, new_files: list[dict], meta: dict) -> int:
+    def _publish_append(
+        self, new_files: list[dict], meta: dict, app_version: int | None = None
+    ) -> int | None:
         """txn_write's commit loop, reduced to the guarded fast path
         (no stats, no partitions, identity mapping, no constraints).
         The fast-path preconditions are RE-CHECKED against the live
         head inside the loop: a constraint or column-DDL commit racing
         this write must raise, not be silently erased by a manifest
-        built without those keys."""
+        built without those keys.
+
+        ``app_version`` (the streaming sink's batch id) is checked
+        against the head's watermark for ``self.app_id`` inside the
+        loop: at or below it the batch already landed, so the staged
+        files are dropped and None is returned; otherwise the commit
+        records it (txn_write's idempotent-write rule)."""
         import os as _os
         import shutil as _shutil
         import time as _time
 
         from tdataframe_spark.sources.txn import (
             ConcurrentWriteError,
+            _carry_constraints,
             _merge_schemas,
             _publish,
         )
@@ -786,6 +782,11 @@ class _TxnWriterBase:
 
         for _ in range(50):
             version, latest = txn_latest(self.path)
+            if app_version is not None and (latest or {}).get(
+                "apps", {}
+            ).get(self.app_id, -1) >= app_version:
+                _drop_staged()
+                return None
             blocker = _fastpath_blocker(latest, self.mode)
             if blocker:
                 # the blocker string names the cause and remedy
@@ -828,11 +829,13 @@ class _TxnWriterBase:
                 "dv": dv,
                 "meta": meta,
             }
-            # table properties ride every commit (constraints are
-            # guarded absent on the fast path; properties are not)
-            props = dict((latest or {}).get("properties", {}))
-            if props:
-                manifest["properties"] = props
+            # properties and writer watermarks ride every commit
+            # (constraints and generated rules are guarded absent)
+            _carry_constraints(manifest, latest)
+            if app_version is not None:
+                manifest["apps"] = {
+                    **manifest.get("apps", {}), self.app_id: app_version
+                }
             if _publish(self.path, version + 1, manifest):
                 return version + 1
         raise ConcurrentWriteError(
@@ -864,59 +867,35 @@ class TxnBatchWriter(_TxnWriterBase, DataSourceWriter):
 
 
 class TxnStreamWriter(_TxnWriterBase, DataSourceStreamWriter):
-    def _last_sink_batch(self):
-        """Newest-to-oldest scan for the last commit THIS sink landed —
-        a head-only check misses the fence whenever a non-sink commit
-        (a batch write, OPTIMIZE) took the head after the crash (the
-        _txn_fence discipline in streaming/ops.py).
+    """Streaming sink: each micro-batch is ONE manifest commit. The
+    replay fence is the table's per-app watermark (txn_write's
+    ``app_id``/``app_version``, Delta's SetTransaction): the writer's
+    app id is ``txn_table:<checkpoint id>`` and every commit records
+    ``apps[app_id] = batchId`` atomically with its files. A batch that
+    Spark replays after a crash between the sink commit and the
+    checkpoint commit finds its id at or below the watermark and lands
+    nothing. A query on a fresh checkpoint is a new writer: its batches
+    land (Delta's semantics)."""
 
-        The scan result is CACHED on the writer: versions only grow, so
-        after the one full scan at startup each micro-batch re-scans
-        only the commits landed since the previous poll — without the
-        cache a long-running stream on a table with a deep retained
-        history (many OPTIMIZE/batch/DDL commits above the last sink
-        commit) pays O(retained manifests) of driver JSON reads on
-        EVERY commit."""
-        versions = _versions(self.path)
-        floor = getattr(self, "_fence_scanned_to", 0)
-        for v in reversed(versions):
-            if v <= floor:
-                break  # everything at/below was scanned last poll
-            meta = _load(self.path, v).get("meta", {})
-            if meta.get("sink") == "txn_table" and "batch_id" in meta:
-                # newest sink commit in the unscanned range supersedes
-                # whatever the cache held
-                self._fence_batch = meta["batch_id"]
-                break
-        if versions:
-            self._fence_scanned_to = max(versions)
-        return getattr(self, "_fence_batch", None)
+    def __init__(self, schema: StructType, options, mode: str):
+        super().__init__(schema, options, mode)
+        checkpoint = options.get("checkpointlocation")
+        if not checkpoint:
+            raise ValueError(
+                "txn_table stream sink needs "
+                '.option("checkpointLocation", ...): the checkpoint names '
+                "the writer whose batch ids fence replays"
+            )
+        from tdataframe_spark.streaming.ops import _ckpt_id
+
+        self.app_id = f"txn_table:{_ckpt_id(checkpoint)}"
 
     def commit(self, messages, batchId: int) -> None:
-        applied = self._last_sink_batch()
-        if applied is not None:
-            if applied == batchId:
-                # replayed batch (crash between sink commit and
-                # checkpoint commit): the manifest already carries it —
-                # drop the re-staged files, publish nothing
-                self._clean(messages)
-                return
-            if applied > batchId:
-                # a FOREIGN checkpoint (fresh batch ids on a table owned
-                # by a further-along stream): silently skipping would be
-                # data loss, folding in would double rows — refuse
-                self._clean(messages)
-                raise ValueError(
-                    f"{self.path} was last written by a txn_table stream "
-                    f"at batch {applied}, but this query is at batch "
-                    f"{batchId} — a different checkpoint owns this "
-                    "table; write elsewhere or resume the original "
-                    "checkpoint"
-                )
         new_files = self._land(messages)
         if new_files:
             self._publish_append(
-                new_files, {"sink": "txn_table", "batch_id": batchId}
+                new_files, {"sink": "txn_table", "batch_id": batchId},
+                app_version=batchId,
             )
 
 

@@ -301,48 +301,25 @@ def _once_ledger(path: str, checkpoint: str, what: str, data_dir: str | None = N
     return already_applied, record, stamp_for
 
 
-def _txn_fence(state_path: str, checkpoint: str, what: str):
-    """Replay fence for sinks whose state lives in a transactional table
-    (``sources/txn.py``): owner and applied-batch id ride the commit
-    metadata, so they become visible ATOMICALLY with the state change —
-    exactly-once with no marker files at all. Batch ids are monotonic
-    within a checkpoint and applied in order, so ``batch_id <= the last
-    SINK commit's batch_id`` is the complete replay test.
+def _txn_app(state_path: str, checkpoint: str, what: str) -> str:
+    """The ``app_id`` of a fold sink whose state is a transactional table:
+    ``what:<checkpoint id>``. Passed to the commit with
+    ``app_version=batch_id``, the table's per-app watermark skips a
+    replayed batch inside the commit loop, atomically. Batch ids only
+    order batches within one checkpoint, so a head that already records
+    a ``what`` writer from another checkpoint is refused."""
+    from tdataframe_spark.sources.txn import txn_latest
 
-    The fence scans manifests newest→oldest for the most recent commit
-    carrying a ``batch_id`` — NOT just the table head: a non-sink commit
-    in between (``compact_txn``'s OPTIMIZE, a manual ``txn_write``)
-    must neither erase the replay fence (re-folding a crashed batch)
-    nor bypass the ownership check. The scan stops at the first sink
-    commit, which is almost always the head or one behind it."""
-    from tdataframe_spark.sources import txn as _txn
-
-    ckpt_id = _ckpt_id(checkpoint)
-
-    def _last_sink_meta() -> dict | None:
-        for v in reversed(_txn._versions(state_path)):
-            meta = _txn._load(state_path, v).get("meta", {})
-            if "batch_id" in meta:
-                return meta
-        return None
-
-    def already_applied(batch_id: int) -> bool:
-        meta = _last_sink_meta()
-        if meta is None:
-            return False
-        owner = meta.get("owner")
-        if owner is not None and owner != ckpt_id:
+    app = f"{what}:{_ckpt_id(checkpoint)}"
+    for other in (txn_latest(state_path)[1] or {}).get("apps", {}):
+        if other.startswith(f"{what}:") and other != app:
             raise ValueError(
-                f"{what} at {state_path} is owned by checkpoint {owner}; "
-                f"refusing to fold stream {ckpt_id} into it — reuse "
-                "the original checkpoint or build a fresh state path"
+                f"{what} at {state_path} is owned by checkpoint "
+                f"{other.split(':', 1)[1]}; refusing to fold stream "
+                f"{app.split(':', 1)[1]} into it — reuse the original "
+                "checkpoint or build a fresh state path"
             )
-        return batch_id <= meta.get("batch_id", -1)
-
-    def meta_for(batch_id: int) -> dict:
-        return {"owner": ckpt_id, "batch_id": batch_id, "sink": what}
-
-    return already_applied, meta_for
+    return app
 
 
 def _staged_swap(data: str, build_merged, write_initial, stamp: str | None = None) -> None:
@@ -428,8 +405,9 @@ def stream_upsert_to_parquet(
     The merge itself is the batch upsert shape (anti-join survivors ∪ batch)
     — one shuffle on the keys. With ``txn=True`` the state is a
     transactional manifest table (``sources/txn.py``): each merge is one
-    atomic commit carrying the batch id, giving exactly-once under crash
-    AND snapshot-isolated concurrent readers. The default writes a plain
+    atomic commit that records the batch id in the table's per-app
+    watermark (``_txn_app``), giving exactly-once under crash AND
+    snapshot-isolated concurrent readers. The default writes a plain
     parquet dir via the rename-aside swap (single-writer semantics; safe
     here because a same-batch replay of this merge is idempotent —
     anti-join + union of identical rows reproduces the same table).
@@ -447,26 +425,18 @@ def stream_upsert_to_parquet(
         )
     from pyspark.sql import Window
 
-    fence = _txn_fence(path, checkpoint, "cdc upsert") if txn else None
-
     def _merge(batch: DataFrame, batch_id: int) -> None:
         spark = batch.sparkSession
         if txn:
             from tdataframe_spark.sources.txn import txn_upsert
 
-            already_applied, meta_for = fence
-            if already_applied(batch_id):
-                return  # replayed batch: commit meta says it is folded in
             # ONE MERGE implementation — txn_upsert owns the order_col
-            # last-wins dedup too. The (app_id, batch_id) watermark
-            # makes the check-then-merge ATOMIC: a twin landing after
-            # already_applied() turns this commit into a graceful skip
-            # inside the commit loop, never a double-apply (the fence
-            # keeps the ownership refusal the watermark cannot express)
+            # last-wins dedup too; the watermark skips a replayed batch
             txn_upsert(
                 batch, path, keys, order_col=order_col,
-                meta=meta_for(batch_id), delete_when=delete_when,
-                app_id=f"cdc_upsert:{_ckpt_id(checkpoint)}",
+                meta={"sink": "cdc_upsert", "batch_id": batch_id},
+                delete_when=delete_when,
+                app_id=_txn_app(path, checkpoint, "cdc_upsert"),
                 app_version=batch_id,
             )
             return
@@ -529,12 +499,13 @@ def stream_rollup_refresh(
 
     Exactly-once (default ``txn=True``): the state is a transactional
     manifest table (``sources/txn.py``) and every refresh — including
-    the multi-day partition replacement — is ONE atomic commit whose
-    metadata carries the applied batch id. A replayed batch (foreachBatch
-    is at-least-once after a crash) compares its id against the table
-    head and skips; because the id becomes visible atomically WITH the
-    state change, there is no crash instant where the fold happened but
-    the fence doesn't know it. The legacy ``txn=False`` path keeps the
+    the multi-day partition replacement — is ONE atomic commit that
+    records the batch id in the table's per-app watermark. A replayed
+    batch (foreachBatch is at-least-once after a crash) finds its id at
+    or below the watermark on the head and commits nothing; because the
+    id becomes visible atomically WITH the state change, there is no
+    crash instant where the fold happened but the watermark doesn't
+    know it. The legacy ``txn=False`` path keeps the
     plain ``day=`` directory layout with the after-the-fact marker
     ledger — and that scheme's disclosed window (a crash between
     state-write and marker-write re-folds the batch, and a crash mid
@@ -544,7 +515,9 @@ def stream_rollup_refresh(
     identify batches within the checkpoint that produced them, so folding
     a different checkpoint's stream into existing state would either
     silently skip (id collision) or double-count (full source replay).
-    The first build records the owner; a mismatch raises instead.
+    The owner is the checkpoint whose watermark the state records (the
+    marker ledger's ``_owner`` file on the legacy path); a mismatch
+    raises instead.
     """
     import os
 
@@ -561,21 +534,14 @@ def stream_rollup_refresh(
         from tdataframe_spark.ops.rollup import build_rollup_txn, refresh_rollup_txn
         from tdataframe_spark.sources.txn import is_txn_table
 
-        already_applied, meta_for = _txn_fence(path, checkpoint, "rollup")
-
         def _apply_txn(batch: DataFrame, batch_id: int) -> None:
-            if already_applied(batch_id):
-                return  # replayed batch: the commit meta says it folded in
-            if is_txn_table(path):
-                refresh_rollup_txn(
-                    batch, path, value_col, bucket_us, group_cols,
-                    meta=meta_for(batch_id),
-                )
-            else:
-                build_rollup_txn(
-                    batch, path, value_col, bucket_us, group_cols,
-                    meta=meta_for(batch_id),
-                )
+            fold = refresh_rollup_txn if is_txn_table(path) else build_rollup_txn
+            fold(
+                batch, path, value_col, bucket_us, group_cols,
+                meta={"sink": "rollup", "batch_id": batch_id},
+                app_id=_txn_app(path, checkpoint, "rollup"),
+                app_version=batch_id,
+            )
 
         return _run_foreach_batch(events, _apply_txn, checkpoint, available_now)
 
@@ -834,8 +800,9 @@ def _stream_signature_index(
     — an Arrow mapInPandas signature op like phash_images /
     audio_fingerprints), and its (media_id, signature) rows are folded
     into a TRANSACTIONAL index table as ONE atomic append commit
-    carrying the batch id — exactly-once under crash/replay via the
-    commit-meta fence (the rollup/upsert sink discipline), and
+    recording the batch id in the table's per-app watermark —
+    exactly-once under crash/replay (the rollup/upsert sink
+    discipline, ``_txn_app``), and
     snapshot-isolated for concurrent matchers: a match_*_index running
     mid-commit sees the previous complete index, never a half batch.
 
@@ -845,18 +812,13 @@ def _stream_signature_index(
     cross-set matcher keeps fan-out on the batch side."""
     from tdataframe_spark.sources.txn import txn_write
 
-    already_applied, meta_for = _txn_fence(index_path, checkpoint, what)
-
     def _fold(batch: DataFrame, batch_id: int) -> None:
-        if already_applied(batch_id):
-            return  # replayed batch: commit meta says it is folded in
         sigs = signer(batch).filter("ok").select("media_id", sig_col)
-        # watermark: a twin racing this append skips atomically in the
-        # commit loop (blind appends otherwise always land — the
-        # double-append window between the fence check and the commit)
         txn_write(
-            sigs, index_path, mode="append", meta=meta_for(batch_id),
-            app_id=f"{what}:{_ckpt_id(checkpoint)}", app_version=batch_id,
+            sigs, index_path, mode="append",
+            meta={"sink": what, "batch_id": batch_id},
+            app_id=_txn_app(index_path, checkpoint, what),
+            app_version=batch_id,
         )
 
     return _run_foreach_batch(media, _fold, checkpoint, available_now)
@@ -874,7 +836,7 @@ def stream_media_to_phash_index(
     payloads (``media_id, kind, payload`` — e.g. a binaryFile/parquet
     ``readStream`` over an ingestion drop zone) are perceptual-hashed
     per micro-batch and appended to the transactional pHash index as
-    one atomic, batch-id-fenced commit. ``match_phash_index`` reads the
+    one atomic commit, fenced by the table's per-app watermark. ``match_phash_index`` reads the
     txn index directly — the r8 image-dedup index becomes maintainable
     by a stream, not just buildable by a job."""
     from tdataframe_spark.ops.multimodal import phash_images
@@ -897,27 +859,21 @@ def stream_media_to_landmark_index(
     arriving batch of media payloads runs ``landmarker`` (an Arrow
     landmark op — ``audio_landmarks`` or ``video_frame_landmarks``,
     possibly with kwargs bound) and its (media_id, frame_off, lhash)
-    rows land in the transactional index as ONE atomic batch-id-fenced
-    append — the same exactly-once fence as the pHash/afp index streams
-    (a landmark op fans out several rows per item and has no ``ok``
-    column: undecodable payloads simply emit no rows, so the generic
-    single-signature fold does not apply). ``match_landmark_index``
-    reads the txn index directly, snapshot-isolated against in-flight
-    appends."""
+    rows land in the transactional index as ONE atomic append fenced by
+    the per-app watermark — the same exactly-once fence as the pHash/afp
+    index streams (a landmark op fans out several rows per item and has
+    no ``ok`` column: undecodable payloads simply emit no rows, so the
+    generic single-signature fold does not apply).
+    ``match_landmark_index`` reads the txn index directly,
+    snapshot-isolated against in-flight appends."""
     from tdataframe_spark.sources.txn import txn_write
 
-    already_applied, meta_for = _txn_fence(
-        index_path, checkpoint, "landmark index"
-    )
-
     def _fold(batch: DataFrame, batch_id: int) -> None:
-        if already_applied(batch_id):
-            return  # replayed batch: commit meta says it is folded in
         lms = landmarker(batch).select("media_id", "frame_off", "lhash")
-        # same atomic twin guard as _stream_signature_index
         txn_write(
-            lms, index_path, mode="append", meta=meta_for(batch_id),
-            app_id=f"landmark_index:{_ckpt_id(checkpoint)}",
+            lms, index_path, mode="append",
+            meta={"sink": "landmark_index", "batch_id": batch_id},
+            app_id=_txn_app(index_path, checkpoint, "landmark_index"),
             app_version=batch_id,
         )
 

@@ -317,26 +317,51 @@ def test_compact_txn_preserves_partitioning_and_fails_on_race(spark, tmp_path):
         txn_write(base, path, mode="overwrite", expected_version=v - 1)
 
 
-def test_txn_fence_survives_interleaved_non_sink_commits(spark, tmp_path):
-    """Review regression: the streaming replay fence must find the last
-    SINK commit, not just the table head — an OPTIMIZE or manual append
-    between sink commits must neither erase the applied-batch fence
-    (double-fold) nor bypass the ownership check."""
+def test_txn_fence_survives_interleaved_non_sink_commits(
+    spark, tmp_path, monkeypatch
+):
+    """The one exactly-once fence of a txn table is the per-app watermark
+    on the head. Fold-sink commits (app_id from _txn_app, app_version =
+    batch id), then an OPTIMIZE, an overwrite and a vacuum: the vacuum
+    leaves exactly one manifest, the applied batch is still skipped, a
+    foreign checkpoint is still refused, and a pinned read of an old
+    version raises FileNotFoundError. The vacuum unlinks the old
+    manifests before it reclaims any directory, so a crash at its first
+    physical delete leaves no surviving manifest naming a reclaimed
+    file."""
     from tdataframe_spark.sources.layout import compact_txn
-    from tdataframe_spark.streaming.ops import _txn_fence
+    from tdataframe_spark.sources.txn import _versions, txn_app_version
+    from tdataframe_spark.streaming.ops import _txn_app
 
-    path = str(tmp_path / "t")
-    already_applied, meta_for = _txn_fence(path, str(tmp_path / "ck"), "rollup")
-    txn_write(spark.range(3), path, meta=meta_for(0))
-    txn_write(spark.range(3, 6), path, meta=meta_for(1))
-    assert already_applied(1) and already_applied(0)
-    compact_txn(spark, path)  # non-sink commit now at head
-    assert already_applied(1), "compaction erased the replay fence"
-    assert not already_applied(2)
-    # ownership survives too: a foreign checkpoint still gets refused
-    foreign, _ = _txn_fence(path, str(tmp_path / "other"), "rollup")
+    path, ck = str(tmp_path / "t"), str(tmp_path / "ck")
+    app = _txn_app(path, ck, "rollup")
+    txn_write(spark.range(3), path, app_id=app, app_version=0)     # v1
+    txn_write(spark.range(3, 6), path, app_id=app, app_version=1)  # v2
+    compact_txn(spark, path)                                       # v3
+    txn_write(spark.range(10, 13), path, mode="overwrite")         # v4
+
+    def crash_rmtree(p, *a, **k):
+        raise RuntimeError("injected crash at first physical delete")
+
+    # txn_vacuum imports shutil locally — patch the module attribute
+    monkeypatch.setattr("shutil.rmtree", crash_rmtree)
+    with pytest.raises(RuntimeError, match="injected crash"):
+        txn_vacuum(path, keep_versions=1, min_age_s=0)
+    monkeypatch.undo()
+    assert _versions(path) == [4]
+    assert txn_read(spark, path).count() == 3
+    assert txn_vacuum(path, keep_versions=1, min_age_s=0)  # reclaims now
+    assert _versions(path) == [4]
+
+    assert txn_app_version(path, app) == 1
+    assert txn_write(spark.range(3), path, app_id=app, app_version=1) == 4
+    assert txn_read(spark, path).count() == 3
     with pytest.raises(ValueError, match="owned by checkpoint"):
-        foreign(1)
+        _txn_app(path, str(tmp_path / "other"), "rollup")
+    for v in (1, 3):
+        with pytest.raises(FileNotFoundError):
+            txn_read(spark, path, version=v)
+    assert txn_write(spark.range(3), path, app_id=app, app_version=2) == 5
 
 
 def test_vacuum_spares_young_unreferenced_commits(spark, tmp_path):
@@ -447,26 +472,23 @@ def test_txn_upsert_preserves_partitioning_and_races_loudly(spark, tmp_path, mon
 def test_vacuum_keeps_the_fence_manifest_and_asof_falls_back_to_mtime(
     spark, tmp_path
 ):
-    """Second-review regressions: vacuum must not unlink the newest
-    manifest carrying a streaming batch_id (it is the replay fence and
-    ownership record), and as_of on a manifest without 'ts' falls back
-    to the file mtime instead of being unreachable."""
+    """Second-review regressions: vacuum must keep the replay fence
+    and ownership record (the watermark rides the head manifest, which
+    vacuum always keeps), and as_of on a manifest without 'ts' falls
+    back to the file mtime instead of being unreachable."""
     import time as _time
 
     from tdataframe_spark.sources.txn import _load, _manifest_path
-    from tdataframe_spark.streaming.ops import _txn_fence
+    from tdataframe_spark.streaming.ops import _txn_app
 
     path = str(tmp_path / "t")
-    ck = str(tmp_path / "ck")
-    already_applied, meta_for = _txn_fence(path, ck, "rollup")
-    txn_write(spark.range(3), path, meta=meta_for(0))
+    app = _txn_app(path, str(tmp_path / "ck"), "rollup")
+    txn_write(spark.range(3), path, app_id=app, app_version=0)
     txn_write(spark.range(3, 6), path, mode="overwrite")  # non-sink head
     txn_vacuum(path, keep_versions=1, min_age_s=0)
-    # the sink manifest survived the vacuum → fence + ownership intact
-    assert already_applied(0)
-    foreign, _ = _txn_fence(path, str(tmp_path / "other"), "rollup")
+    assert txn_write(spark.range(3), path, app_id=app, app_version=0) == 2
     with pytest.raises(ValueError, match="owned by checkpoint"):
-        foreign(0)
+        _txn_app(path, str(tmp_path / "other"), "rollup")
 
     # as_of fallback: strip 'ts' from the head manifest (pre-timestamp era)
     v, m = txn_latest(path)
@@ -626,57 +648,6 @@ def test_changes_since_on_a_table_with_no_commits_is_empty_not_a_crash(
     txn_write(spark.range(3), path)
     df, cur = txn_changes_since(spark, path, cur)
     assert df.count() == 3 and cur == 1
-
-
-def test_vacuumed_fence_manifest_is_files_invalid_but_keeps_the_fence(
-    spark, tmp_path
-):
-    """r6-ADVICE: vacuum retains the newest batch_id manifest as the
-    replay fence but reclaims its data files — the manifest is now marked
-    vacuumed (files stripped), so as_of never resolves to it, a pinned
-    read errors clearly instead of failing on missing files, and the
-    change feed refuses it; the fence itself still works."""
-    from tdataframe_spark.sources.txn import _load, txn_changes
-    from tdataframe_spark.streaming.ops import _txn_fence
-
-    path = str(tmp_path / "t")
-    already_applied, meta_for = _txn_fence(path, str(tmp_path / "ck"), "rollup")
-    txn_write(spark.range(3), path, meta=meta_for(0))          # v1 = fence
-    fence_ts = txn_latest(path)[1]["ts"]
-    txn_write(spark.range(3, 6), path, mode="overwrite")        # v2 head
-    txn_vacuum(path, keep_versions=1, min_age_s=0)
-
-    m = _load(path, 1)
-    assert m.get("vacuumed") is True and m["files"] == []
-    assert already_applied(0)  # fence meta survived
-    with pytest.raises(FileNotFoundError, match="vacuumed"):
-        txn_read(spark, path, version=1)
-    # as_of inside [fence, head) used to resolve to the fence and then
-    # fail on missing files — now it reports no readable commit
-    with pytest.raises(FileNotFoundError, match="no commit at or before"):
-        txn_read(spark, path, as_of=fence_ts)
-    with pytest.raises(ValueError, match="vacuumed"):
-        txn_changes(spark, path, 1)
-    # head unaffected
-    assert txn_read(spark, path).count() == 3
-
-
-def test_vacuum_leaves_fence_readable_when_its_files_are_still_live(
-    spark, tmp_path
-):
-    """Append-only history: the out-of-window fence's files are all still
-    referenced by the retained head, so nothing is reclaimed and the
-    fence snapshot must STAY readable (no premature vacuumed flag)."""
-    from tdataframe_spark.sources.txn import _load
-    from tdataframe_spark.streaming.ops import _txn_fence
-
-    path = str(tmp_path / "t")
-    _, meta_for = _txn_fence(path, str(tmp_path / "ck"), "rollup")
-    txn_write(spark.range(3), path, meta=meta_for(0))   # v1 = fence
-    txn_write(spark.range(3, 6), path)                  # v2 append (head)
-    txn_vacuum(path, keep_versions=1, min_age_s=0)
-    assert not _load(path, 1).get("vacuumed")
-    assert txn_read(spark, path, version=1).count() == 3
 
 
 def test_txn_upsert_delete_arm(spark, tmp_path, monkeypatch):
@@ -919,59 +890,6 @@ def test_data_skipping_prunes_files_and_stays_exact(spark, tmp_path):
     assert _rows(post.filter("v between 1000 and 1499").select("k", "v")) == sorted(
         set(want) | {(99999, 1250.0)}
     )
-
-
-def test_stale_hint_on_vacuum_survivor_never_yields_a_false_head(
-    spark, tmp_path
-):
-    """Review-confirmed r7 bug: vacuum deletes manifests AROUND a retained
-    out-of-window fence, so a stale hint landing on the fence used to
-    forward-probe fence→(gap)→"head" — returning the fence as the table
-    head (reads error on a healthy table; a concurrent write would CAS
-    against the false head and publish into the gap, invisible to
-    listing-based readers). Now: vacuum stamps retained out-of-window
-    manifests and refreshes the hint, and a probe landing on a stamped or
-    vacuumed manifest falls back to the listing. Covers BOTH fence
-    flavors: files-reclaimed (vacuumed) and files-still-live
-    (append-only, retained_fence only)."""
-    from tdataframe_spark.sources.txn import _hint_path, _load
-    from tdataframe_spark.streaming.ops import _txn_fence
-
-    # flavor 1: overwrite history → fence files reclaimed
-    path = str(tmp_path / "a")
-    _, meta_for = _txn_fence(path, str(tmp_path / "cka"), "rollup")
-    txn_write(spark.range(2), path)                       # v1
-    txn_write(spark.range(2), path, meta=meta_for(0))     # v2 = fence
-    txn_write(spark.range(3), path, mode="overwrite")     # v3
-    txn_write(spark.range(4), path, mode="overwrite")     # v4 head
-    txn_vacuum(path, keep_versions=1, min_age_s=0)
-    # simulate the crashed-writer stale hint pointing at the fence
-    with open(_hint_path(path), "w") as f:
-        f.write("2")
-    v, m = txn_latest(path)
-    assert v == 4 and not m.get("vacuumed"), (v, m)
-    assert txn_read(spark, path).count() == 4
-    # and a write after the stale hint lands at the TRUE next version
-    assert txn_write(spark.range(1), path) == 5
-
-    # flavor 2: append-only history → fence files all still live, the
-    # manifest is NOT vacuumed — the retained_fence stamp alone must
-    # defeat the forward probe
-    path = str(tmp_path / "b")
-    _, meta_for = _txn_fence(path, str(tmp_path / "ckb"), "rollup")
-    txn_write(spark.range(2), path, meta=meta_for(0))     # v1 = fence
-    txn_write(spark.range(2, 4), path)                    # v2
-    txn_write(spark.range(4, 6), path)                    # v3 head
-    txn_vacuum(path, keep_versions=1, min_age_s=0)
-    m1 = _load(path, 1)
-    assert m1.get("retained_fence") and not m1.get("vacuumed")
-    with open(_hint_path(path), "w") as f:
-        f.write("1")
-    v, _m = txn_latest(path)
-    assert v == 3
-    assert txn_read(spark, path).count() == 6
-    # the fence snapshot itself stays readable (files all live)
-    assert txn_read(spark, path, version=1).count() == 2
 
 
 def test_range_filter_validates_against_full_snapshot_and_stats_cols_typo(
@@ -1429,45 +1347,6 @@ def test_txn_delete_rejects_reserved_ref_columns_legacy_table(spark, tmp_path):
         json.dump(m, f)
     with pytest.raises(ValueError, match="__dv_file"):
         txn_delete(spark, path, "k = 1")
-
-
-def test_vacuum_rewrites_fences_before_reclaiming_dirs(spark, tmp_path, monkeypatch):
-    """r8-ADVICE ordering: vacuum must mark fence manifests
-    files-invalid BEFORE rmtree'ing the data/DV dirs they reference — a
-    crash between the two must leave a pinned read failing with the
-    documented 'vacuumed' error, never path-not-found."""
-    from tdataframe_spark.sources.txn import _load, txn_delete
-    from tdataframe_spark.streaming.ops import _txn_fence
-
-    path = str(tmp_path / "t")
-    _, meta_for = _txn_fence(path, str(tmp_path / "ck"), "rollup")
-    txn_write(spark.range(4), path, meta=meta_for(0))      # v1 = fence
-    txn_delete(spark, path, "id = 1")                      # v2: DV on v1 files
-    txn_write(spark.range(10, 13), path, mode="overwrite")  # v3 head (drops DV)
-
-    calls = []
-
-    def crash_rmtree(p, *a, **k):
-        calls.append(p)
-        raise RuntimeError("injected crash at first physical delete")
-
-    # txn_vacuum imports shutil locally — patch the module attribute
-    monkeypatch.setattr("shutil.rmtree", crash_rmtree)
-    with pytest.raises(RuntimeError, match="injected crash"):
-        txn_vacuum(path, keep_versions=1, min_age_s=0)
-    monkeypatch.undo()
-
-    # the crash hit the FIRST physical delete — nothing was reclaimed yet,
-    # but the fence manifest is already files-invalid, so no surviving
-    # manifest references anything the interrupted pass would have removed
-    assert calls and all(os.path.isdir(p) for p in calls)
-    m = _load(path, 1)
-    assert m.get("vacuumed") is True and m["files"] == [] and m["dv"] == []
-    with pytest.raises(FileNotFoundError, match="vacuumed"):
-        txn_read(spark, path, version=1)
-    # a re-run vacuum completes the reclamation
-    removed = txn_vacuum(path, keep_versions=1, min_age_s=0)
-    assert removed and txn_read(spark, path).count() == 3
 
 
 # ---------------------------------------------------------------------------
@@ -2784,9 +2663,10 @@ def test_cdf_streaming_cdc_mode(spark, tmp_path):
 
 
 def test_review_r11_fixes(spark, tmp_path):
-    """r11 review pins: (1) vacuum materializes a retained DELTA fence
-    BEFORE unlinking its chain ancestors (pre-fix: FileNotFoundError
-    mid-vacuum, permanently broken table); (2) rewrite='full' merges
+    """r11 review pins: (1) vacuum materializes the oldest retained
+    DELTA manifest BEFORE unlinking its chain ancestors (pre-fix:
+    FileNotFoundError mid-vacuum, permanently broken table);
+    (2) rewrite='full' merges
     under cdf.enabled record change files under the POST-overwrite
     (identity) names — the feed must show real values for renamed
     columns, not silent NULLs; (3) the probe bail requires exact-key
@@ -2795,27 +2675,29 @@ def test_review_r11_fixes(spark, tmp_path):
     from tdataframe_spark.sources.txn import (
         _load,
         _materialize,
+        _versions,
         txn_change_feed,
         txn_rename_column,
         txn_set_properties,
         txn_upsert,
     )
 
-    # (1) delta fence below the window, checkpoint (overwrite) between
+    # (1) the oldest retained manifest is a delta whose chain roots at
+    # the overwrite checkpoint below the window
     path = str(tmp_path / "t1")
     df = spark.createDataFrame([(i, i) for i in range(8)], "k long, v long")
     txn_write(df, path)                                     # v1 full
     txn_write(df.limit(1), path)                            # v2 delta
-    txn_write(df.limit(1), path, meta={"batch_id": 7})      # v3 delta FENCE
-    txn_write(df, path, mode="overwrite")                   # v4 full
+    txn_write(df, path, mode="overwrite")                   # v3 full
+    txn_write(df.limit(1), path)                            # v4 delta
     txn_write(df.limit(1), path)                            # v5 delta
     txn_write(df.limit(1), path)                            # v6 delta
-    assert "log" in _load(path, 3)  # the fence IS a delta pre-vacuum
+    assert "log" in _load(path, 5)  # the oldest survivor IS a delta
     txn_vacuum(path, keep_versions=2, min_age_s=0)
-    m3 = _load(path, 3)
-    assert m3.get("retained_fence") and "log" not in m3
-    assert m3.get("vacuumed")  # its files died with the overwrite
-    assert txn_read(spark, path).count() == 10  # 8 overwrite + 2 appends
+    assert _versions(path) == [5, 6]
+    assert "log" not in _load(path, 5)
+    assert txn_read(spark, path).count() == 11  # 8 overwrite + 3 appends
+    assert txn_read(spark, path, version=5).count() == 10
     txn_vacuum(path, keep_versions=2, min_age_s=0)  # idempotent, no crash
 
     # (2) full-rewrite merge + cdf + renamed column
@@ -3119,51 +3001,47 @@ def test_parquet_checkpoint_roundtrip_and_vacuum(spark, tmp_path):
 
 
 def test_parquet_checkpoint_fence_keeps_sidecar_ref(spark, tmp_path):
-    """A retained out-of-window FENCE that is a parquet checkpoint with
-    all files still live is stamped meta-only — the rewrite keeps the
-    sidecar ref instead of inlining the file list, and the fence stays
-    readable; a files-invalid fence drops the ref and its sidecar is
-    reclaimed."""
-    from tdataframe_spark.sources.txn import _load, _versions
+    """Vacuum keeps the parquet-checkpoint form: a retained parquet
+    checkpoint keeps its sidecar ref, the oldest retained manifest
+    materialized from a big delta is externalized again (not inlined),
+    and the sidecars of unlinked manifests are reclaimed."""
+    import glob
+
+    from tdataframe_spark.sources.txn import _load, _versions, txn_set_properties
 
     path = str(tmp_path / "t")
     df = spark.createDataFrame([(i, i) for i in range(10)], "k long, v long")
     txn_write(df, path)
-    from tdataframe_spark.sources.txn import txn_set_properties
-
     txn_set_properties(
         path,
         {"txn.parquet_checkpoint_rows": "2", "txn.checkpoint_interval": "2"},
     )
-    txn_write(df.limit(1).coalesce(1), path)  # v3 (delta)
-    # v4: append-only pq checkpoint (interval=2) carrying a sink
-    # batch_id — a fence
-    txn_write(df.limit(1).coalesce(1), path, meta={"batch_id": 1})
-    v_f = _versions(path)[-1]
-    assert "state_parquet" in _load(path, v_f)
-    txn_write(df.limit(1).coalesce(1), path)
-    txn_write(df.limit(1).coalesce(1), path)
-    txn_vacuum(path, keep_versions=2, min_age_s=0)
-    raw = _load(path, v_f)
-    # append-only history: every fence file is still live -> ref kept
-    assert raw.get("retained_fence") and "state_parquet" in raw
-    assert txn_read(spark, path, version=v_f).count() == 12
-    # now make the fence's files dead and vacuum again
-    txn_write(df, path, mode="overwrite")
-    txn_write(df.limit(1).coalesce(1), path)
-    txn_vacuum(path, keep_versions=1, min_age_s=0)
-    raw = _load(path, v_f)
-    assert raw.get("vacuumed") and "state_parquet" not in raw
-    import glob
+    for _ in range(4):
+        txn_write(df.limit(1).coalesce(1), path)   # v3..v6
+    n = txn_read(spark, path).count()
+    assert "state_parquet" in _load(path, 4) and "log" in _load(path, 5)
 
-    disk = {
-        os.path.basename(p)
-        for p in glob.glob(os.path.join(path, "_txn", "checkpoint-*.parquet"))
-    }
-    live = {
-        _load(path, v).get("state_parquet") for v in _versions(path)
-    } - {None}
-    assert disk == live
+    def sidecars_match_manifests():
+        disk = {
+            os.path.basename(p)
+            for p in glob.glob(
+                os.path.join(path, "_txn", "checkpoint-*.parquet")
+            )
+        }
+        live = {_load(path, v).get("state_parquet") for v in _versions(path)}
+        assert disk == live - {None}
+
+    txn_vacuum(path, keep_versions=3, min_age_s=0)  # keeps v4..v6
+    assert _versions(path) == [4, 5, 6]
+    assert "state_parquet" in _load(path, 4)
+    assert txn_read(spark, path, version=4).count() == n - 2
+    sidecars_match_manifests()
+    txn_vacuum(path, keep_versions=2, min_age_s=0)  # v5: delta -> checkpoint
+    raw = _load(path, 5)
+    assert "log" not in raw and "state_parquet" in raw
+    assert txn_read(spark, path, version=5).count() == n - 1
+    sidecars_match_manifests()
+    assert txn_read(spark, path).count() == n
 
 
 def test_parquet_checkpoint_missing_sidecar_error(spark, tmp_path):

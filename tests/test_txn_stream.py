@@ -225,37 +225,70 @@ def test_txn_sink_guards_route_to_txn_write(spark, tmp_path):
         ).option("partition_by", "id").mode("append").save()
 
 
-def test_txn_sink_refuses_foreign_checkpoint(spark, tmp_path):
-    """A second streaming query with a FRESH checkpoint (batch ids
-    restart at 0) against a table owned by a further-along stream must
-    raise, not silently drop its batches."""
-    src, path, ck1, ck2 = (
-        str(tmp_path / d) for d in ("src", "t", "ck1", "ck2")
-    )
-    ev = spark.range(4).select("id", (F.col("id") + 100).alias("w"))
-    ev.repartition(2).write.parquet(src)
+def test_txn_sink_two_checkpoints_both_land(spark, tmp_path):
+    """Two streaming queries, each with its own checkpoint, write batch 0
+    to one table: each checkpoint is its own writer, so both batches
+    land. A stream sink without a checkpoint option is refused."""
+    from pyspark.sql.types import LongType, StructField, StructType
 
-    def run(ck):
-        st = spark.readStream.schema(ev.schema).parquet(src)
+    from tdataframe_spark.sources.txn_stream import (
+        TxnStreamWriter,
+        register_txn_stream,
+    )
+
+    register_txn_stream(spark)
+    path = str(tmp_path / "t")
+    ev = spark.range(4).select("id", (F.col("id") + 100).alias("w"))
+    for name, rows in (("a", ev), ("b", ev.withColumn("id", F.col("id") + 10))):
+        src = str(tmp_path / f"src_{name}")
+        rows.repartition(2).write.parquet(src)
         q = (
-            st.writeStream.format("txn_table")
+            spark.readStream.schema(ev.schema).parquet(src)
+            .writeStream.format("txn_table")
             .option("path", path)
-            .option("checkpointLocation", ck)
+            .option("checkpointLocation", str(tmp_path / f"ck_{name}"))
             .trigger(availableNow=True)
             .start()
         )
         q.awaitTermination(180)
+    got = _rows(txn_read(spark, path))
+    assert got == sorted(
+        _rows(ev) + _rows(ev.withColumn("id", F.col("id") + 10))
+    )
+    schema = StructType([StructField("id", LongType())])
+    with pytest.raises(ValueError, match='checkpointLocation'):
+        TxnStreamWriter(schema, {"path": path}, "append")
 
-    run(ck1)
-    # push the owner's batch id past 0 so the foreign query is behind
-    spark.range(4, 5).select("id", (F.col("id") + 100).alias("w")).write.mode(
-        "append"
-    ).parquet(src)
-    run(ck1)
-    before = _rows(txn_read(spark, path))
-    with pytest.raises(Exception, match="different checkpoint"):
-        run(ck2)
-    assert _rows(txn_read(spark, path)) == before
+
+@pytest.mark.parametrize("sink", ["batch", "stream"])
+def test_txn_sink_keeps_app_watermarks(spark, tmp_path, sink):
+    """A native sink commit carries every writer's watermark forward: a
+    loader's replayed batch is still skipped after the sink wrote."""
+    from tdataframe_spark.sources.txn import txn_app_version
+    from tdataframe_spark.sources.txn_stream import register_txn_stream
+
+    register_txn_stream(spark)
+    path = str(tmp_path / "t")
+    txn_write(spark.range(3), path, app_id="loader", app_version=5)
+    if sink == "batch":
+        spark.range(3).write.format("txn_table").option("path", path).mode(
+            "append"
+        ).save()
+    else:
+        src = str(tmp_path / "src")
+        spark.range(3).write.parquet(src)
+        q = (
+            spark.readStream.schema("id long").parquet(src)
+            .writeStream.format("txn_table")
+            .option("path", path)
+            .option("checkpointLocation", str(tmp_path / "ck"))
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination(180)
+    assert txn_app_version(path, "loader") == 5
+    txn_write(spark.range(3), path, app_id="loader", app_version=5)
+    assert txn_read(spark, path).count() == 6
 
 
 def test_txn_stream_source_flags_dv_resurrection(spark, tmp_path):
@@ -276,74 +309,27 @@ def test_txn_stream_source_flags_dv_resurrection(spark, tmp_path):
 
 
 def test_txn_stream_refuses_vacuumed_fence_baseline(spark, tmp_path):
-    """r9-ADVICE: a vacuumed parent RETAINED as a streaming fence still
-    loads (vacuumed:true, files stripped) — using its empty file list
-    as the baseline would count every cumulative file of the next
-    commit as 'added' and silently re-emit the whole table. The source
-    must treat a vacuumed baseline exactly like a missing one: raise."""
-    from tdataframe_spark.sources.txn import _load
+    """r9-ADVICE: a commit whose parent manifest was vacuumed away has
+    no baseline — treating the missing parent as empty would count
+    every cumulative file of the commit as 'added' and silently re-emit
+    the whole table. The source must raise instead."""
+    from tdataframe_spark.sources.txn import _versions
     from tdataframe_spark.sources.txn_stream import _added_files
-    from tdataframe_spark.streaming.ops import _txn_fence
 
     path = str(tmp_path / "t")
-    _, meta_for = _txn_fence(path, str(tmp_path / "fence_ck"), "rollup")
-    txn_write(spark.range(3), path, meta=meta_for(0))    # v1 = fence
+    txn_write(spark.range(3), path)                       # v1
     txn_write(spark.range(3, 6), path, mode="overwrite")  # v2 head
     txn_vacuum(path, keep_versions=1, min_age_s=0)
-    assert _load(path, 1).get("vacuumed") is True  # fence kept, files gone
+    assert _versions(path) == [2]  # v1's manifest is gone
     with pytest.raises(ValueError, match="vacuumed away"):
         _added_files(path, 2)
     # and through the real source: a stream whose window starts exactly
-    # at the fence version must raise, never emit v2's cumulative files
+    # at the vacuumed version must raise, never emit v2's cumulative files
     with pytest.raises(Exception, match="vacuumed away"):
         _run(
             spark, path, str(tmp_path / "out"), str(tmp_path / "ck"),
             start_version=1,
         )
-
-
-def test_txn_sink_fence_scan_is_incremental(spark, tmp_path):
-    """r9-ADVICE: the streaming sink's fence scan caches the last
-    scanned version — after startup each micro-batch re-reads only the
-    manifests landed since the previous poll, not the whole retained
-    history (O(batches x manifests) driver cost on long streams)."""
-    from pyspark.sql.types import LongType, StructField, StructType
-
-    from tdataframe_spark.sources import txn_stream as ts
-
-    path = str(tmp_path / "t")
-    schema = StructType([StructField("id", LongType())])
-    txn_write(spark.range(3), path, mode="append")
-    w = ts.TxnStreamWriter(schema, {"path": path}, "append")
-    assert w._last_sink_batch() is None  # full startup scan, no fence
-
-    loads = []
-    real_load = ts._load
-
-    def counting_load(p, v):
-        loads.append(v)
-        return real_load(p, v)
-
-    ts._load = counting_load
-    try:
-        # pile non-sink commits above: an uncached scan re-reads them all
-        for i in range(3, 8):
-            txn_write(spark.range(i, i + 1), path, mode="append")
-        assert w._last_sink_batch() is None
-        first = list(loads)
-        assert sorted(first) == [2, 3, 4, 5, 6]  # only the new commits
-        loads.clear()
-        assert w._last_sink_batch() is None      # nothing new landed
-        assert loads == []                        # zero manifest reads
-        # a sink commit landed by someone else is still picked up
-        from tdataframe_spark.sources.txn import _publish
-
-        v7 = dict(real_load(path, 6), version=7, parent=6,
-                  meta={"sink": "txn_table", "batch_id": 41})
-        assert _publish(path, 7, v7)
-        assert w._last_sink_batch() == 41
-    finally:
-        ts._load = real_load
 
 
 def test_txn_sink_partitioned_append_and_create(spark, tmp_path):
@@ -656,3 +642,39 @@ def test_txn_stream_restart_admission_control(spark, tmp_path):
     # offsets entry per commit with cap=1; without the sidecar the whole
     # backlog lands as ONE post-restart batch)
     assert len(batches) - n_before >= 4, (n_before, len(batches))
+
+
+def test_txn_stream_cdc_replays_across_purge_and_optimize(spark, tmp_path):
+    """A purge and an OPTIMIZE rewrite files without changing rows
+    (``data_change: false``): a CDC replay streams across both and yields
+    exactly the change feed's rows, and the append feed skips them too."""
+    from tdataframe_spark.sources.layout import compact_txn
+    from tdataframe_spark.sources.txn import (
+        txn_change_feed,
+        txn_latest,
+        txn_purge,
+        txn_set_properties,
+    )
+
+    path = str(tmp_path / "t")
+    txn_write(
+        spark.range(6).select("id", (F.col("id") * 2).alias("v")), path
+    )                                                   # v1
+    txn_set_properties(path, {"cdf.enabled": "true"})   # v2
+    txn_delete(spark, path, "id = 1")                   # v3: recorded
+    assert txn_purge(spark, path, min_deleted_ratio=0.0) == 4
+    compact_txn(spark, path)                            # v5
+    txn_write(
+        spark.createDataFrame([(7, 14)], "id long, v long"), path
+    )                                                   # v6
+    assert txn_latest(path)[0] == 6
+    cols = ["id", "v", "_change_type", "_commit_version"]
+    out, ck = str(tmp_path / "out"), str(tmp_path / "ck")
+    _run(spark, path, out, ck, cdc=True)
+    want = _rows(txn_change_feed(spark, path, 0).select(*cols))
+    assert _rows(spark.read.parquet(out).select(*cols)) == want
+    assert ("delete", 3) in {(r[2], r[3]) for r in want}
+    # the append feed skips the two maintenance commits the same way
+    out2, ck2 = str(tmp_path / "out2"), str(tmp_path / "ck2")
+    _run(spark, path, out2, ck2, start_version=3)
+    assert _rows(spark.read.parquet(out2)) == [(7, 14)]

@@ -280,9 +280,8 @@ def _materialize(path: str, version: int, raw: dict | None = None) -> dict:
     the walk is cached, so a sequence of resolutions (history, vacuum,
     the change feed) is O(1) amortized per version.
 
-    Table state that is O(columns), not O(files) — schema, meta,
-    constraints, generated rules, properties, retired physicals — rides
-    every commit in full, so only files/dv need replay."""
+    Every key but files/dv rides each manifest in full (the table-state
+    rule is :func:`_next_manifest`'s), so only files/dv need replay."""
     def _copy(state: dict) -> dict:
         # defensive shell copy: callers may extend/replace the lists
         # (writers build live sets) — the cached
@@ -513,6 +512,80 @@ def _publish(path: str, version: int, manifest: dict) -> bool:
         return False
     finally:
         os.unlink(tmp)
+
+
+# TABLE STATE: what every commit inherits from its parent unless it is
+# the commit that changes it. Every other manifest key is a fact of one
+# commit (see _next_manifest).
+_STATE_KEYS = (
+    "files", "schema", "dv", "retired_physical",
+    "constraints", "generated", "properties", "apps",
+)
+
+
+def _next_manifest(
+    version: int, head: dict | None, meta: dict, cdf=None, **changes
+) -> dict:
+    """The complete manifest of the commit after ``version``, whose
+    state is ``head`` — the one place that decides what a commit
+    carries, so no commit can drop table state by omission.
+
+    * TABLE STATE (``_STATE_KEYS``: live files, schema, deletion
+      vectors, retired physical names, CHECK constraints, generated-
+      column rules, properties, writer-app watermarks) is taken from
+      ``head`` as is, except the keys named in ``changes``, which
+      replace it; a ``None`` value drops the key. ``files``/``schema``/
+      ``dv`` are always written, the other state keys only when
+      non-empty.
+    * COMMIT FACTS — ``version``, ``parent``, ``ts`` (wall clock, the
+      time-travel anchor), ``meta``, and ``cdf`` (the commit's recorded
+      change files, when given) — belong to this commit alone and are
+      never inherited.
+
+    No other key appears on a manifest (``_commit_form`` later swaps
+    ``files``/``dv`` for a delta ``log`` or a parquet sidecar on
+    disk)."""
+    assert set(changes) <= set(_STATE_KEYS), sorted(changes)
+    state = {k: (head or {}).get(k) for k in _STATE_KEYS}
+    state.update(changes)
+    out = {
+        "version": version + 1,
+        "parent": version,
+        "ts": time.time(),
+        "files": state["files"],
+        "schema": state["schema"],
+        "dv": state["dv"] or [],
+        "meta": meta,
+    }
+    if cdf:
+        out["cdf"] = list(cdf)
+    for k in _STATE_KEYS[3:]:
+        if state[k]:
+            out[k] = state[k]
+    return out
+
+
+def _commit(
+    path: str, build, what: str, max_retries: int = 50, on_lost=None
+) -> int:
+    """The one optimistic-concurrency loop every commit runs: read the
+    head, ``build(version, head)`` the next manifest (``None`` means
+    there is nothing to commit: the head version is returned), publish
+    it as ``version + 1``; after a lost race call ``on_lost`` (drop what
+    the attempt staged, or raise) and rebuild against the new head.
+    Returns the committed version."""
+    for _ in range(max_retries):
+        version, head = txn_latest(path)
+        manifest = build(version, head)
+        if manifest is None:
+            return version
+        if _publish(path, version + 1, manifest):
+            return version + 1
+        if on_lost is not None:
+            on_lost()
+    raise ConcurrentWriteError(
+        f"gave up after {max_retries} commit races {what} {path}"
+    )
 
 
 def _collect_files(commit_dir: str, root: str) -> list[dict]:
@@ -1073,16 +1146,18 @@ def _cdf_enabled(manifest: dict | None) -> bool:
 
 
 def _commit_file_delta(path: str, version: int, raw: dict):
-    """(files added by ``version``, removed_any, dv_changed) — straight
-    from the delta log when the commit is incremental (one JSON read),
-    else a materialized parent diff. None when the baseline is
-    unknowable (parent vacuumed away)."""
+    """(files added by ``version``, whether it also removed or hid
+    rows) — straight from the delta log when the commit is incremental
+    (one JSON read, no parent reconstruction), else a materialized
+    parent diff. Removal means files dropped vs the parent OR any
+    deletion-vector change: a DV hides rows, and a restore that shrinks
+    the DV set RESURRECTS them — neither is an append. None when the
+    baseline is unknowable (parent vacuumed away): treating it as empty
+    would report the table's whole cumulative file set as added."""
     if "log" in raw:
         log = raw["log"]
-        return (
-            list(log.get("add", [])),
-            bool(log.get("remove")),
-            bool(log.get("dv_add") or log.get("dv_remove")),
+        return list(log.get("add", [])), bool(
+            log.get("remove") or log.get("dv_add") or log.get("dv_remove")
         )
     m = _materialize(path, version, raw=raw)
     try:
@@ -1096,7 +1171,7 @@ def _commit_file_delta(path: str, version: int, raw: dict):
     dv_changed = {_dv_key(e) for e in m.get("dv", [])} != {
         _dv_key(e) for e in (pm or {}).get("dv", [])
     }
-    return added, removed, dv_changed
+    return added, removed or dv_changed
 
 
 def _part_matches(part: dict, where: dict) -> bool:
@@ -1682,8 +1757,8 @@ def txn_write(
         inc_fields.append(StructField(f.name, f.dataType, f.nullable, md))
     schema_json = StructType(inc_fields).json()
 
-    for _ in range(max_retries):
-        version, latest = txn_latest(path)
+    def build(version, latest):
+        nonlocal expected_version
         # the idempotence re-check comes FIRST — even before the
         # version pin: if this writer's twin applied the same logical
         # commit while we staged, the right outcome is a graceful skip
@@ -1694,10 +1769,9 @@ def txn_write(
             prev = (latest or {}).get("apps", {}).get(app_id)
             if prev is not None and app_version <= prev:
                 _drop_staged()
-                return version
+                return None
         if expected_version is not None and version != expected_version:
             if _on_conflict is None:
-                _drop_staged()
                 raise ConcurrentWriteError(
                     f"table {path} moved to v{version}; "
                     f"expected v{expected_version}"
@@ -1705,7 +1779,7 @@ def txn_write(
             # optimistic rebase: the checker raises on a REAL conflict;
             # returning means the concurrent commits are disjoint and
             # this commit's staged files re-apply against the new head
-            # (the loop body below recomputes the live set from it)
+            # (the live set below is recomputed from it)
             try:
                 _on_conflict(expected_version, version)
             except BaseException:
@@ -1737,7 +1811,6 @@ def txn_write(
                     # committing would resurrect or collide old data
                     conflict.append(f.name)
             if conflict:
-                _drop_staged()
                 raise ConcurrentWriteError(
                     f"column mapping of {path} changed under this write "
                     f"(columns {sorted(conflict)}): a rename/drop or a "
@@ -1762,7 +1835,6 @@ def txn_write(
                     live_now
                     and tuple(sorted(partition_by or [])) not in live_now
                 ):
-                    _drop_staged()
                     raise ConcurrentWriteError(
                         f"partition layout of {path} changed under this "
                         "write — re-run it against the new head (or opt "
@@ -1773,10 +1845,13 @@ def txn_write(
         # old files and must retain their DVs (entries pointing at files
         # replace_where dropped are inert — part-file names are unique)
         dv = list((latest or {}).get("dv", []))
+        changes: dict = {}
         if mode == "overwrite":
-            live = []
-            dv = []
-            committed_schema = schema_json  # full replace: schema resets
+            # full replace: files, DVs, schema and the retired physical
+            # names reset; constraints, rules, properties and writer
+            # watermarks describe the table and carry over
+            live, dv, committed_schema = [], [], schema_json
+            changes["retired_physical"] = None
         elif replace_where:
             old_files = (latest or {}).get("files", [])
             existing_cols = {k for f in old_files for k in f["partition"]}
@@ -1843,79 +1918,46 @@ def txn_write(
             committed_schema = _merge_schemas(
                 (latest or {}).get("schema"), schema_json
             )
-        manifest = {
-            "version": version + 1,
-            "parent": version,
-            "ts": time.time(),  # commit wall-clock: time-travel anchor
-            "files": live + new_files,
-            "schema": committed_schema,
-            "dv": dv,
-            "meta": meta or {},
-        }
-        if _cdf_paths:
-            # recorded change files (internal — txn_upsert): the commit's
-            # exact row-level changes, pre-materialized so CDC consumers
-            # never diff snapshots for it
-            manifest["cdf"] = list(_cdf_paths)
-        # retired physical names ride every non-overwrite commit so a
-        # re-added column can never claim a dropped column's storage
-        retired = (
-            [] if mode == "overwrite"
-            else list((latest or {}).get("retired_physical", []))
-        )
-        if retired:
-            manifest["retired_physical"] = retired
-        live_constraints = dict((latest or {}).get("constraints", {}))
-        if live_constraints != head_constraints:
-            # a constraint was added/dropped between validation and this
-            # commit attempt: the batch was not checked against the live
-            # contract — refuse rather than slip an unvalidated commit in
-            # (same staged-dir cleanup as the column-mapping race above)
-            _drop_staged()
+        # CHECK constraints and generated-column rules added or dropped
+        # between validation and this attempt: the batch was not checked
+        # against the live contract — refuse rather than slip it in
+        if dict((latest or {}).get("constraints", {})) != head_constraints:
             raise ConcurrentWriteError(
                 f"CHECK constraints of {path} changed under this write — "
                 "re-run it against the new head"
             )
-        if live_constraints:
-            manifest["constraints"] = live_constraints
-        # same race rule for generated-column rules: a rule added or
-        # dropped between compute/validate and this commit attempt
-        # means the batch was built against a stale contract
-        live_generated = dict((latest or {}).get("generated", {}))
-        if live_generated != head_generated:
-            _drop_staged()
+        if dict((latest or {}).get("generated", {})) != head_generated:
             raise ConcurrentWriteError(
                 f"generated-column rules of {path} changed under this "
                 "write — re-run it against the new head"
             )
-        if live_generated:
-            manifest["generated"] = live_generated
-        # table properties (ops metadata) survive EVERY mode, overwrite
-        # included — they describe the table, not a data version
-        live_props = dict((latest or {}).get("properties", {}))
-        if live_props:
-            manifest["properties"] = live_props
-        # writer-app watermarks (Delta's setTransaction): survive EVERY
-        # mode — they describe what each writer has applied, not a data
-        # version (the replay/twin SKIP ran at the top of the loop)
-        live_apps = dict((latest or {}).get("apps", {}))
         if app_id is not None:
-            live_apps[app_id] = app_version
-        if live_apps:
-            manifest["apps"] = live_apps
-        if _publish(path, version + 1, manifest):
-            return version + 1
+            changes["apps"] = {
+                **(latest or {}).get("apps", {}), app_id: app_version
+            }
+        # _cdf_paths (internal — txn_upsert): the commit's
+        # exact row-level changes, pre-materialized so CDC consumers
+        # never diff snapshots for it
+        return _next_manifest(
+            version, latest, meta or {}, cdf=_cdf_paths,
+            files=live + new_files, schema=committed_schema, dv=dv,
+            **changes,
+        )
+
+    def on_lost():
+        # a strict pin without a conflict checker cannot rebase; with a
+        # checker the next attempt validates the new head and rebases
         if expected_version is not None and _on_conflict is None:
-            _drop_staged()
             raise ConcurrentWriteError(
-                f"lost commit race on {path} at v{version + 1}"
+                f"lost commit race on {path} at v{expected_version + 1}"
             )
-        # with a conflict checker, a lost publish race loops back to the
-        # top, where the new head is validated and the pin rebases
-    _drop_staged()
-    raise ConcurrentWriteError(
-        f"gave up after {max_retries} commit races on {path}"
-    )
+
+    try:
+        return _commit(path, build, "on", max_retries, on_lost)
+    except ConcurrentWriteError:
+        # refused or out of retries: nothing this write staged commits
+        _drop_staged()
+        raise
 
 
 def _resolve_snapshot(
@@ -2395,7 +2437,7 @@ def txn_change_feed(
             part = present(df)
         else:
             delta = _commit_file_delta(path, v, raw)
-            if delta is not None and not delta[1] and not delta[2]:
+            if delta is not None and not delta[1]:
                 added = delta[0]
                 if not added:
                     continue  # property/DDL/schema-only commit: no rows
@@ -3220,12 +3262,20 @@ def txn_delete(
     import shutil
 
     cond = F.expr(predicate) if isinstance(predicate, str) else predicate
-    for _ in range(max_retries):
-        version, manifest = txn_latest(path)
+    staged: list[str] = []  # this attempt's DV (and change-file) dirs
+
+    def drop_staged():
+        # lost the race: the matching row set may have changed under the
+        # new head — drop the staged DV (and change files) and recompute
+        for d in staged:
+            shutil.rmtree(d, ignore_errors=True)
+        staged.clear()
+
+    def build(version, manifest):
         if manifest is None:
             raise FileNotFoundError(f"no transactional table at {path}")
         if not manifest["files"]:
-            return version  # empty table: nothing to delete
+            return None  # empty table: nothing to delete
         # the row-ref columns must come off the SCAN itself (_metadata
         # does not survive txn_read's own DV anti-join), so rebuild the
         # snapshot read here with refs attached, then apply existing DVs
@@ -3256,8 +3306,8 @@ def txn_delete(
             # the DV write and the change file share one scan's rows
             matched = matched.persist()
         hits = matched.select(_DV_FILE, _DV_POS)
-        dv_id = uuid.uuid4().hex[:12]
-        dv_dir = os.path.join(path, "dv", dv_id)
+        dv_dir = os.path.join(path, "dv", uuid.uuid4().hex[:12])
+        staged.append(dv_dir)
         # cluster the DV by part-file so reads join against few,
         # file-local entries; AQE coalesces a small delete to one file
         hits.repartition(F.col(_DV_FILE)).write.parquet(dv_dir)
@@ -3273,6 +3323,7 @@ def txn_delete(
                 ]
             ).withColumn("_change_type", F.lit("delete"))
             cdf_dir = os.path.join(path, "cdf", uuid.uuid4().hex[:12])
+            staged.append(cdf_dir)
             dels.write.parquet(cdf_dir)
             cdf_rel = [
                 os.path.relpath(p, path)
@@ -3298,47 +3349,16 @@ def txn_delete(
             .first()
         )
         if agg["n"] == 0:
-            shutil.rmtree(dv_dir, ignore_errors=True)
-            if cdf_rel:
-                shutil.rmtree(
-                    os.path.join(path, os.path.dirname(cdf_rel[0])),
-                    ignore_errors=True,
-                )
-            return version  # Delta-style: no matching rows, no commit
+            drop_staged()
+            return None  # Delta-style: no matching rows, no commit
         refs = sorted(agg["refs"])
         new_entries = [{"path": p, "refs": refs} for p in new_rel]
-        new_manifest = {
-            "version": version + 1,
-            "parent": version,
-            "ts": time.time(),
-            "files": manifest["files"],
-            "schema": manifest["schema"],
-            "dv": list(manifest.get("dv", [])) + new_entries,
-            "meta": {**(meta or {}), "op": "delete"},
-        }
-        if cdf_rel:
-            new_manifest["cdf"] = cdf_rel
-        # the dropped-column fence must survive EVERY non-overwrite
-        # commit, or a later re-add claims a retired physical name and
-        # resurrects old file values
-        if manifest.get("retired_physical"):
-            new_manifest["retired_physical"] = list(
-                manifest["retired_physical"]
-            )
-        _carry_constraints(new_manifest, manifest)
-        if _publish(path, version + 1, new_manifest):
-            return version + 1
-        # lost the race: the matching row set may have changed under the
-        # new head — drop the staged DV (and change files) and recompute
-        shutil.rmtree(dv_dir, ignore_errors=True)
-        if cdf_rel:
-            shutil.rmtree(
-                os.path.join(path, os.path.dirname(cdf_rel[0])),
-                ignore_errors=True,
-            )
-    raise ConcurrentWriteError(
-        f"gave up after {max_retries} commit races deleting from {path}"
-    )
+        return _next_manifest(
+            version, manifest, {**(meta or {}), "op": "delete"}, cdf=cdf_rel,
+            dv=list(manifest.get("dv", [])) + new_entries,
+        )
+
+    return _commit(path, build, "deleting from", max_retries, drop_staged)
 
 
 def txn_purge(
@@ -3368,13 +3388,28 @@ def txn_purge(
 
     import pyarrow.parquet as pq
 
-    for _ in range(max_retries):
-        version, manifest = txn_latest(path)
+    staged: list[str] = []  # this attempt's commit id
+
+    def drop_staged():
+        # lost race: redo — drop the staged data AND this attempt's
+        # bloom sidecar (it references only the dropped files; leaving
+        # it would accumulate one orphan per retry until vacuum)
+        for commit_id in staged:
+            shutil.rmtree(
+                os.path.join(path, "data", commit_id), ignore_errors=True
+            )
+            try:
+                os.unlink(os.path.join(path, "bloom", f"{commit_id}.parquet"))
+            except OSError:
+                pass
+        staged.clear()
+
+    def build(version, manifest):
         if manifest is None:
             raise FileNotFoundError(f"no transactional table at {path}")
         dv = _read_dv(spark, path, manifest)
         if dv is None:
-            return version
+            return None
         per_file = {
             r[0]: r[1] for r in dv.groupBy(_DV_FILE).count().collect()
         }
@@ -3387,7 +3422,7 @@ def txn_purge(
             if total and n_del / total >= min_deleted_ratio:
                 targets.add(rel)
         if not targets:
-            return version
+            return None
         schema = StructType.fromJson(json.loads(manifest["schema"]))
         # the purge rewrite stays entirely in PHYSICAL column space: it
         # reads physical, writes physical, and keeps the manifest schema
@@ -3404,7 +3439,7 @@ def txn_purge(
         )
         partition_by = _layout_order(manifest)
         commit_id = uuid.uuid4().hex[:12]
-        commit_dir = os.path.join(path, "data", commit_id)
+        staged.append(commit_id)
         w = clean
         pcols = []
         for c in partition_by:
@@ -3414,10 +3449,9 @@ def txn_purge(
         writer = w.write.mode("overwrite")
         if pcols:
             writer = writer.partitionBy(*pcols)
+        commit_dir = os.path.join(path, "data", commit_id)
         writer.parquet(commit_dir)
         new_files = _collect_files(commit_dir, path)
-        import pyarrow.parquet as _pq
-
         stats_cols = sorted(
             {k for f in manifest["files"] for k in f.get("stats", {})}
         )
@@ -3425,7 +3459,7 @@ def txn_purge(
             abs_f = os.path.join(path, f["path"])
             # ONE footer open per file, shared between the row-count
             # recording and the stats inheritance (same as txn_write)
-            md = _pq.ParquetFile(abs_f).metadata
+            md = pq.ParquetFile(abs_f).metadata
             f["rows"] = md.num_rows
             if stats_cols:
                 f["stats"] = _file_stats(abs_f, set(stats_cols), _md=md)
@@ -3455,36 +3489,13 @@ def txn_purge(
             if not isinstance(e, dict) or not e.get("refs")
             or any(r in kept_paths for r in e["refs"])
         ]
-        new_manifest = {
-            "version": version + 1,
-            "parent": version,
-            "ts": time.time(),
-            "files": kept + new_files,
-            "schema": manifest["schema"],
-            "dv": new_dv,
-            "meta": {**(meta or {}), "op": "purge", "data_change": False},
-        }
-        # same retired-physical propagation as txn_delete: the purge
-        # keeps non-rewritten files whose dropped columns must stay
-        # unclaimable
-        if manifest.get("retired_physical"):
-            new_manifest["retired_physical"] = list(
-                manifest["retired_physical"]
-            )
-        _carry_constraints(new_manifest, manifest)
-        if _publish(path, version + 1, new_manifest):
-            return version + 1
-        # lost race: redo — drop the staged data AND this iteration's
-        # bloom sidecar (it references only the dropped files; leaving
-        # it would accumulate one orphan per retry until vacuum)
-        shutil.rmtree(commit_dir, ignore_errors=True)
-        try:
-            os.unlink(os.path.join(path, "bloom", f"{commit_id}.parquet"))
-        except OSError:
-            pass
-    raise ConcurrentWriteError(
-        f"gave up after {max_retries} commit races purging {path}"
-    )
+        return _next_manifest(
+            version, manifest,
+            {**(meta or {}), "op": "purge", "data_change": False},
+            files=kept + new_files, dv=new_dv,
+        )
+
+    return _commit(path, build, "purging", max_retries, drop_staged)
 
 
 def txn_restore(
@@ -3507,51 +3518,31 @@ def txn_restore(
     a retry cannot change what is being restored)."""
     # FileNotFoundError if never existed or vacuumed away
     src = _materialize(path, version)
-    for _ in range(max_retries):
-        head, _latest = txn_latest(path)
-        manifest = {
-            "version": head + 1,
-            "parent": head,
-            "ts": time.time(),
-            "files": src["files"],
-            "schema": src["schema"],
-            "dv": src.get("dv", []),  # the snapshot's deletes come back too
-            "meta": {**(meta or {}), "restore_of": version},
-        }
-        # retired physicals accumulate across the restore: both the
-        # snapshot's set and everything retired since must stay
-        # unclaimable by future column adds
+
+    def build(head, latest):
+        # RESTORE restores table state — files, schema, DVs (the
+        # snapshot's deletes come back too), and the snapshot's
+        # constraints and generated-column rules with its data. Retired
+        # physicals accumulate: both the snapshot's set and everything
+        # retired since stay unclaimable by future column adds.
+        # Properties and writer-app watermarks describe the TABLE, not a
+        # data version, so they ride from the LIVE head: RESTORE rolls
+        # back data, not ops metadata or what each writer has applied
+        # (a loader re-feeding rolled-back batches does so with a HIGHER
+        # app_version — the watermark is monotonic)
         retired = sorted(
             set(src.get("retired_physical", []))
-            | set((_latest or {}).get("retired_physical", []))
+            | set((latest or {}).get("retired_physical", []))
         )
-        if retired:
-            manifest["retired_physical"] = retired
-        # RESTORE restores table state, constraints and generated-
-        # column rules included — the snapshot's contract comes back
-        # with its data
-        for key in ("constraints", "generated"):
-            if src.get(key):
-                manifest[key] = dict(src[key])
-        # properties describe the TABLE, not a data version (the
-        # txn_set_properties contract: they ride every commit until
-        # changed via txn_set_properties) — so they come from the LIVE
-        # head, not the snapshot; RESTORE rolls back data, not ops
-        # metadata set since
-        if (_latest or {}).get("properties"):
-            manifest["properties"] = dict(_latest["properties"])
-        # writer-app watermarks also survive from the LIVE head: a
-        # RESTORE rolls back data, not what each writer has applied —
-        # a loader that must re-feed rolled-back batches does so with a
-        # HIGHER app_version (re-running the old one would be skipped,
-        # by design: the watermark is monotonic)
-        if (_latest or {}).get("apps"):
-            manifest["apps"] = dict(_latest["apps"])
-        if _publish(path, head + 1, manifest):
-            return head + 1
-    raise ConcurrentWriteError(
-        f"gave up after {max_retries} commit races restoring {path}"
-    )
+        return _next_manifest(
+            head, latest, {**(meta or {}), "restore_of": version},
+            files=src["files"], schema=src["schema"], dv=src.get("dv", []),
+            retired_physical=retired,
+            constraints=src.get("constraints"),
+            generated=src.get("generated"),
+        )
+
+    return _commit(path, build, "restoring", max_retries)
 
 
 def txn_clone(
@@ -3613,32 +3604,17 @@ def txn_clone(
             dv.append({**e, "base": e.get("base") or abs_src})
         else:  # pre-refs bare-string entry
             dv.append({"path": e, "refs": None, "base": abs_src})
-    new_manifest = {
-        "version": 1,
-        "parent": 0,
-        "ts": time.time(),
-        "files": files,
-        "schema": manifest["schema"],
-        "dv": dv,
-        "meta": {
-            **(meta or {}),
-            "op": "clone",
-            "source": abs_src,
-            "source_version": v,
-        },
-    }
-    # the dropped-column fence travels with the schema: a re-added
-    # column on the CLONE must not claim a physical name that old
-    # (shared) files still carry values for
-    if manifest.get("retired_physical"):
-        new_manifest["retired_physical"] = list(manifest["retired_physical"])
-    # the clone inherits the snapshot's CHECK constraints (it is the
-    # same table contract until someone drops them on the clone) — but
-    # NOT the writer-app watermarks: the clone is a new table, and a
-    # loader feeding it must not be skipped because its twin already
-    # fed the source (see _carry_constraints)
-    _carry_constraints(new_manifest, manifest)
-    new_manifest.pop("apps", None)
+    # the clone inherits the snapshot's table contract (schema, retired
+    # physicals, constraints, generated rules, properties) — but NOT the
+    # writer-app watermarks: the clone is a new table, and a loader
+    # feeding it must not be skipped because its twin already fed the
+    # source (Delta's clone drops txnAppId state the same way)
+    new_manifest = _next_manifest(
+        0, manifest,
+        {**(meta or {}), "op": "clone", "source": abs_src,
+         "source_version": v},
+        files=files, dv=dv, apps=None,
+    )
     if not _publish(dst, 1, new_manifest):
         raise ConcurrentWriteError(
             f"{dst} was created concurrently — clone targets a fresh path"
@@ -3727,20 +3703,6 @@ def _validate_app(app_id, app_version, what: str) -> None:
         )
 
 
-def _carry_constraints(new_manifest: dict, manifest: dict | None) -> None:
-    """Copy the CHECK-constraint set, GENERATED-column rules, table
-    properties, and writer-app watermarks onto a derived manifest —
-    every commit that is not the dedicated DDL for them preserves all
-    four, the same ride-along rule as retired_physical. (txn_clone
-    strips ``apps`` afterwards: a clone is a NEW table, and blocking a
-    loader because its twin already fed the SOURCE would silently skip
-    real data — Delta's clone drops txnAppId state the same way.)"""
-    for key in ("constraints", "properties", "generated", "apps"):
-        val = (manifest or {}).get(key)
-        if val:
-            new_manifest[key] = dict(val)
-
-
 def txn_rename_column(
     path: str,
     old: str,
@@ -3762,8 +3724,7 @@ def txn_rename_column(
     Partition columns are rejected (their name is baked into directory
     layouts and per-file partition values — that rename IS a rewrite).
     Returns the committed version."""
-    for _ in range(max_retries):
-        version, manifest = txn_latest(path)
+    def build(version, manifest):
         schema = _ddl_guard(manifest, old, path, "rename")
         names = [f.name for f in schema.fields]
         if new in names:
@@ -3783,25 +3744,13 @@ def txn_rename_column(
                 fields.append(StructField(new, f.dataType, f.nullable, md))
             else:
                 fields.append(f)
-        new_manifest = {
-            "version": version + 1,
-            "parent": version,
-            "ts": time.time(),
-            "files": manifest["files"],
-            "schema": StructType(fields).json(),
-            "dv": manifest.get("dv", []),
-            "meta": {**(meta or {}), "op": "rename_column",
-                     "from": old, "to": new},
-        }
-        retired = list(manifest.get("retired_physical", []))
-        if retired:
-            new_manifest["retired_physical"] = retired
-        _carry_constraints(new_manifest, manifest)
-        if _publish(path, version + 1, new_manifest):
-            return version + 1
-    raise ConcurrentWriteError(
-        f"gave up after {max_retries} commit races renaming in {path}"
-    )
+        return _next_manifest(
+            version, manifest,
+            {**(meta or {}), "op": "rename_column", "from": old, "to": new},
+            schema=StructType(fields).json(),
+        )
+
+    return _commit(path, build, "renaming in", max_retries)
 
 
 def txn_drop_column(
@@ -3826,34 +3775,26 @@ def txn_drop_column(
     Partition columns are rejected (their name is baked into directory
     layouts); dropping the last column is rejected. Returns the
     committed version."""
-    for _ in range(max_retries):
-        version, manifest = txn_latest(path)
+    def build(version, manifest):
         schema = _ddl_guard(manifest, col, path, "drop")
         if len(schema.fields) == 1:
             raise ValueError(
                 f"cannot drop {col!r}: it is the only column of {path}"
             )
         dropped = next(f for f in schema.fields if f.name == col)
-        fields = [f for f in schema.fields if f.name != col]
-        new_manifest = {
-            "version": version + 1,
-            "parent": version,
-            "ts": time.time(),
-            "files": manifest["files"],
-            "schema": StructType(fields).json(),
-            "dv": manifest.get("dv", []),
-            "meta": {**(meta or {}), "op": "drop_column", "column": col},
-            "retired_physical": sorted(
+        return _next_manifest(
+            version, manifest,
+            {**(meta or {}), "op": "drop_column", "column": col},
+            schema=StructType(
+                [f for f in schema.fields if f.name != col]
+            ).json(),
+            retired_physical=sorted(
                 set(manifest.get("retired_physical", []))
                 | {_phys(dropped)}
             ),
-        }
-        _carry_constraints(new_manifest, manifest)
-        if _publish(path, version + 1, new_manifest):
-            return version + 1
-    raise ConcurrentWriteError(
-        f"gave up after {max_retries} commit races dropping in {path}"
-    )
+        )
+
+    return _commit(path, build, "dropping in", max_retries)
 
 
 def txn_add_constraint(
@@ -3874,8 +3815,8 @@ def txn_add_constraint(
     constraint lands as one metadata-only commit and EVERY subsequent
     write — append, overwrite, replace_where, MERGE, streaming folds —
     validates its batch before any file is staged. Constraints ride
-    every derived commit (delete/purge/restore/clone/column DDL, the
-    retired_physical rule); renaming or dropping a referenced column is
+    every derived commit (delete/purge/restore/clone/column DDL: table
+    state, see ``_next_manifest``); renaming or dropping a referenced column is
     blocked until the constraint is dropped. Returns the committed
     version.
 
@@ -3887,8 +3828,7 @@ def txn_add_constraint(
         raise ValueError(
             f"constraint name must be an identifier, got {name!r}"
         )
-    for _ in range(max_retries):
-        version, manifest = txn_latest(path)
+    def build(version, manifest):
         if manifest is None:
             raise FileNotFoundError(f"no transactional table at {path}")
         cons = dict(manifest.get("constraints", {}))
@@ -3906,30 +3846,13 @@ def txn_add_constraint(
                 f"{n_bad} existing row(s) violate it"
             )
         cons[name] = check
-        new_manifest = {
-            "version": version + 1,
-            "parent": version,
-            "ts": time.time(),
-            "files": manifest["files"],
-            "schema": manifest["schema"],
-            "dv": manifest.get("dv", []),
-            "meta": {**(meta or {}), "op": "add_constraint", "name": name},
-        }
-        if manifest.get("retired_physical"):
-            new_manifest["retired_physical"] = list(
-                manifest["retired_physical"]
-            )
-        # carry every table-contract key, then overwrite the one this
-        # DDL edits — hand-copying the others is the bug class where a
-        # NEW contract key silently drops on the next unrelated DDL
-        _carry_constraints(new_manifest, manifest)
-        new_manifest["constraints"] = cons
-        if _publish(path, version + 1, new_manifest):
-            return version + 1
-    raise ConcurrentWriteError(
-        f"gave up after {max_retries} commit races adding a constraint "
-        f"to {path}"
-    )
+        return _next_manifest(
+            version, manifest,
+            {**(meta or {}), "op": "add_constraint", "name": name},
+            constraints=cons,
+        )
+
+    return _commit(path, build, "adding a constraint to", max_retries)
 
 
 def txn_drop_constraint(
@@ -3939,8 +3862,7 @@ def txn_drop_constraint(
     unknown name raises (a typo'd drop that silently 'succeeds' leaves
     the caller believing enforcement stopped). Returns the committed
     version."""
-    for _ in range(max_retries):
-        version, manifest = txn_latest(path)
+    def build(version, manifest):
         if manifest is None:
             raise FileNotFoundError(f"no transactional table at {path}")
         cons = dict(manifest.get("constraints", {}))
@@ -3950,29 +3872,13 @@ def txn_drop_constraint(
                 f"(has {sorted(cons) or 'none'})"
             )
         del cons[name]
-        new_manifest = {
-            "version": version + 1,
-            "parent": version,
-            "ts": time.time(),
-            "files": manifest["files"],
-            "schema": manifest["schema"],
-            "dv": manifest.get("dv", []),
-            "meta": {**(meta or {}), "op": "drop_constraint", "name": name},
-        }
-        if manifest.get("retired_physical"):
-            new_manifest["retired_physical"] = list(
-                manifest["retired_physical"]
-            )
-        _carry_constraints(new_manifest, manifest)
-        new_manifest.pop("constraints", None)
-        if cons:
-            new_manifest["constraints"] = cons
-        if _publish(path, version + 1, new_manifest):
-            return version + 1
-    raise ConcurrentWriteError(
-        f"gave up after {max_retries} commit races dropping a constraint "
-        f"from {path}"
-    )
+        return _next_manifest(
+            version, manifest,
+            {**(meta or {}), "op": "drop_constraint", "name": name},
+            constraints=cons,
+        )
+
+    return _commit(path, build, "dropping a constraint from", max_retries)
 
 
 def txn_add_generated_column(
@@ -3989,10 +3895,10 @@ def txn_add_generated_column(
     COMPUTES the column when the batch omits it and VALIDATES it (one
     map-side aggregate over the batch, ``col <=> expr``) when the batch
     provides it; a mismatching batch raises before any file is staged.
-    The rule rides every derived commit (the constraint ride-along
-    rule), blocks rename/drop of the column and of every column the
-    expression references, survives RESTORE with its snapshot, and is
-    inherited by clones.
+    The rule rides every derived commit (table state, see
+    ``_next_manifest``), blocks rename/drop of the column and of every
+    column the expression references, survives RESTORE with its
+    snapshot, and is inherited by clones.
 
     Two declaration shapes:
 
@@ -4011,8 +3917,7 @@ def txn_add_generated_column(
         raise ValueError(
             f"generated column name must be an identifier, got {col!r}"
         )
-    for _ in range(max_retries):
-        version, manifest = txn_latest(path)
+    def build(version, manifest):
         if manifest is None:
             raise FileNotFoundError(f"no transactional table at {path}")
         gen = dict(manifest.get("generated", {}))
@@ -4099,31 +4004,13 @@ def txn_add_generated_column(
                 list(schema.fields) + [StructField(col, dt, True)]
             ).json()
         gen[col] = expr
-        new_manifest = {
-            "version": version + 1,
-            "parent": version,
-            "ts": time.time(),
-            "files": manifest["files"],
-            "schema": new_schema_json,
-            "dv": manifest.get("dv", []),
-            "meta": {
-                **(meta or {}),
-                "op": "add_generated_column",
-                "name": col,
-            },
-        }
-        if manifest.get("retired_physical"):
-            new_manifest["retired_physical"] = list(
-                manifest["retired_physical"]
-            )
-        _carry_constraints(new_manifest, manifest)
-        new_manifest["generated"] = gen
-        if _publish(path, version + 1, new_manifest):
-            return version + 1
-    raise ConcurrentWriteError(
-        f"gave up after {max_retries} commit races adding a generated "
-        f"column to {path}"
-    )
+        return _next_manifest(
+            version, manifest,
+            {**(meta or {}), "op": "add_generated_column", "name": col},
+            schema=new_schema_json, generated=gen,
+        )
+
+    return _commit(path, build, "adding a generated column to", max_retries)
 
 
 def txn_drop_generated_column(
@@ -4133,8 +4020,7 @@ def txn_drop_generated_column(
     data (Delta parity: dropping the expression, not the values). One
     metadata-only commit; an unknown rule raises. Returns the committed
     version."""
-    for _ in range(max_retries):
-        version, manifest = txn_latest(path)
+    def build(version, manifest):
         if manifest is None:
             raise FileNotFoundError(f"no transactional table at {path}")
         gen = dict(manifest.get("generated", {}))
@@ -4144,32 +4030,14 @@ def txn_drop_generated_column(
                 f"(has {sorted(gen) or 'none'})"
             )
         del gen[col]
-        new_manifest = {
-            "version": version + 1,
-            "parent": version,
-            "ts": time.time(),
-            "files": manifest["files"],
-            "schema": manifest["schema"],
-            "dv": manifest.get("dv", []),
-            "meta": {
-                **(meta or {}),
-                "op": "drop_generated_column",
-                "name": col,
-            },
-        }
-        if manifest.get("retired_physical"):
-            new_manifest["retired_physical"] = list(
-                manifest["retired_physical"]
-            )
-        _carry_constraints(new_manifest, manifest)
-        new_manifest.pop("generated", None)
-        if gen:
-            new_manifest["generated"] = gen
-        if _publish(path, version + 1, new_manifest):
-            return version + 1
-    raise ConcurrentWriteError(
-        f"gave up after {max_retries} commit races dropping a generated "
-        f"column from {path}"
+        return _next_manifest(
+            version, manifest,
+            {**(meta or {}), "op": "drop_generated_column", "name": col},
+            generated=gen,
+        )
+
+    return _commit(
+        path, build, "dropping a generated column from", max_retries
     )
 
 
@@ -4184,10 +4052,9 @@ def txn_set_properties(
     the manifest as one metadata-only commit. A ``None`` value UNSETS
     its key. Properties describe the table, not a data version: they
     ride every commit (append, overwrite, MERGE, DDL, clone, restore —
-    the retired_physical ride-along rule) until changed here. Values
+    table state, see ``_next_manifest``) until changed here. Values
     are stored as strings. Returns the committed version."""
-    for _ in range(max_retries):
-        version, manifest = txn_latest(path)
+    def build(version, manifest):
         if manifest is None:
             raise FileNotFoundError(f"no transactional table at {path}")
         merged = dict(manifest.get("properties", {}))
@@ -4196,29 +4063,13 @@ def txn_set_properties(
                 merged.pop(k, None)
             else:
                 merged[k] = str(v)
-        new_manifest = {
-            "version": version + 1,
-            "parent": version,
-            "ts": time.time(),
-            "files": manifest["files"],
-            "schema": manifest["schema"],
-            "dv": manifest.get("dv", []),
-            "meta": {**(meta or {}), "op": "set_properties"},
-        }
-        if manifest.get("retired_physical"):
-            new_manifest["retired_physical"] = list(
-                manifest["retired_physical"]
-            )
-        _carry_constraints(new_manifest, manifest)
-        new_manifest.pop("properties", None)
-        if merged:
-            new_manifest["properties"] = merged
-        if _publish(path, version + 1, new_manifest):
-            return version + 1
-    raise ConcurrentWriteError(
-        f"gave up after {max_retries} commit races setting properties "
-        f"on {path}"
-    )
+        return _next_manifest(
+            version, manifest,
+            {**(meta or {}), "op": "set_properties"},
+            properties=merged,
+        )
+
+    return _commit(path, build, "setting properties on", max_retries)
 
 
 def txn_properties(path: str) -> dict[str, str]:
@@ -4249,8 +4100,7 @@ def txn_drop_app(path: str, app_id: str, max_retries: int = 50) -> int:
     a LIVE writer's mark re-opens its replay window. Unknown ids
     raise (a typo'd drop that silently does nothing would leave the
     real mark growing forever). Returns the committed version."""
-    for _ in range(max_retries):
-        version, manifest = txn_latest(path)
+    def build(version, manifest):
         if manifest is None:
             raise FileNotFoundError(f"no transactional table at {path}")
         apps = dict(manifest.get("apps", {}))
@@ -4260,29 +4110,13 @@ def txn_drop_app(path: str, app_id: str, max_retries: int = 50) -> int:
                 f"(has {sorted(apps) or 'none'})"
             )
         del apps[app_id]
-        new_manifest = {
-            "version": version + 1,
-            "parent": version,
-            "ts": time.time(),
-            "files": manifest["files"],
-            "schema": manifest["schema"],
-            "dv": manifest.get("dv", []),
-            "meta": {"op": "drop_app", "app_id": app_id},
-        }
-        if manifest.get("retired_physical"):
-            new_manifest["retired_physical"] = list(
-                manifest["retired_physical"]
-            )
-        _carry_constraints(new_manifest, manifest)
-        new_manifest.pop("apps", None)
-        if apps:
-            new_manifest["apps"] = apps
-        if _publish(path, version + 1, new_manifest):
-            return version + 1
-    raise ConcurrentWriteError(
-        f"gave up after {max_retries} commit races dropping app "
-        f"{app_id!r} on {path}"
-    )
+        return _next_manifest(
+            version, manifest,
+            {"op": "drop_app", "app_id": app_id},
+            apps=apps,
+        )
+
+    return _commit(path, build, f"dropping app {app_id!r} on", max_retries)
 
 
 def txn_history(spark: SparkSession, path: str) -> DataFrame:

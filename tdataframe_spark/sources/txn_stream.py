@@ -34,14 +34,18 @@ Semantics (Delta parity):
 
 Scale shape: planning is driver-side manifest JSON only (O(files
 touched), the same cost txn_read pays); row reads happen on EXECUTORS,
-one input partition per added file, yielding Arrow record batches —
-the driver never materializes data. Shallow-cloned entries resolve
+yielding Arrow record batches — the driver never materializes data. The
+planned files are packed in order into read tasks of at most 128 MB,
+each file counting its size plus 4 MB (Spark's file-source defaults
+``maxPartitionBytes``/``openCostInBytes``), so a small window is one
+task, not one per file. Shallow-cloned entries resolve
 through their recorded base like every other reader.
 """
 
 from __future__ import annotations
 
 import json
+import os
 
 from pyspark.sql.datasource import (
     DataSource,
@@ -53,81 +57,33 @@ from pyspark.sql.types import StructType
 from tdataframe_spark.sources.txn import (
     _PPREFIX,
     _abs_file,
+    _commit_file_delta,
     _load,
     _mapping,
-    _materialize,
     _plain_schema,
     _versions,
     txn_latest,
 )
 
 
-class _FileSlice(InputPartition):
-    """One added data (or recorded-change) file: absolute path + the
-    pinned logical schema (JSON) + logical→physical mapping, self-
-    contained for the executor. ``kind`` is None for the plain append
-    feed, 'insert' / 'cdf' for the CDC mode (with the commit version the
-    slice belongs to)."""
+# Spark's file-source defaults (spark.sql.files.maxPartitionBytes and
+# openCostInBytes): planned files are packed in order into read tasks of
+# at most this many bytes, each file costing its size plus the open cost
+_MAX_PARTITION_BYTES = 128 << 20
+_OPEN_COST_BYTES = 4 << 20
 
-    def __init__(
-        self,
-        abs_path: str,
-        schema_json: str,
-        mapping: dict,
-        kind: str | None = None,
-        version: int = 0,
-    ):
-        self.abs_path = abs_path
+
+class _SlicePack(InputPartition):
+    """One read task, self-contained for the executor: the pinned
+    logical schema (JSON), the logical→physical mapping, and the task's
+    slices in plan order — each an (absolute path, kind, commit version)
+    of one added data or recorded-change file. ``kind`` is None for the
+    plain append feed, 'insert' / 'cdf' for the CDC mode."""
+
+    def __init__(self, schema_json: str, mapping: dict, slices: list):
         self.schema_json = schema_json
         self.mapping = mapping
-        self.kind = kind
-        self.version = version
-
-
-def _added_files(
-    path: str, version: int, raw: dict | None = None
-) -> tuple[list[dict], bool]:
-    """(files added by ``version``, whether it also removed/hid rows).
-    Removal = files dropped vs the parent OR deletion-vector entries
-    grown (a DV hides rows — not an append). A DELTA manifest IS the
-    answer — one JSON read, no parent reconstruction (the incremental
-    commit log's streaming dividend); checkpoint manifests diff against
-    the materialized parent as before. ``raw`` lets a caller that
-    already loaded the manifest skip the re-read."""
-    m = raw if raw is not None else _load(path, version)
-    if "log" in m:
-        log = m["log"]
-        added = list(log.get("add", []))
-        removed = bool(log.get("remove"))
-        dv_changed = bool(log.get("dv_add")) or bool(log.get("dv_remove"))
-        return added, removed or dv_changed
-    m = _materialize(path, version, raw=m)
-    parent = m.get("parent", version - 1)
-    try:
-        pm = _materialize(path, parent) if parent else None
-    except FileNotFoundError:
-        # the parent manifest was vacuumed away: with no baseline the
-        # commit's delta is unknowable — treating it as empty would
-        # re-emit the table's whole cumulative file set as "added"
-        # (every already-delivered row duplicated downstream)
-        raise ValueError(
-            f"commit {parent} of {path} (the baseline for commit "
-            f"{version}) was vacuumed away — restart the stream with "
-            f"start_version >= {version}"
-        )
-    before = {f["path"] for f in (pm or {}).get("files", [])}
-    added = [f for f in m["files"] if f["path"] not in before]
-    removed = bool(before - {f["path"] for f in m["files"]})
-    # ANY deletion-vector change hides or RESURRECTS rows (a restore
-    # shrinking the DV set un-hides rows) — growth-only checks miss the
-    # resurrection side
-    dv_changed = {
-        e["path"] if isinstance(e, dict) else e for e in m.get("dv", [])
-    } != {
-        e["path"] if isinstance(e, dict) else e
-        for e in (pm or {}).get("dv", [])
-    }
-    return added, removed or dv_changed
+        self.slices = slices
 
 
 class TxnStreamReader(DataSourceStreamReader):
@@ -238,8 +194,6 @@ class TxnStreamReader(DataSourceStreamReader):
         if new_progress != self._progress:
             self._save_progress(new_progress)
         self._progress = new_progress
-        out = []
-        sj = self.schema.json()
         have = set(_versions(self.path))
         gaps = [
             v for v in range(start["version"] + 1, end["version"] + 1)
@@ -253,43 +207,39 @@ class TxnStreamReader(DataSourceStreamReader):
                 "vacuumed away — restart the stream with "
                 f"start_version >= {max(gaps)}"
             )
+        slices = []  # (absolute path, bytes, kind, commit version)
         for v in range(start["version"] + 1, end["version"] + 1):
             raw = _load(self.path, v)
             if raw.get("meta", {}).get("data_change") is False:
                 # a purge or OPTIMIZE rewrites files without changing
                 # rows (Delta's dataChange=false): nothing to stream
                 continue
-            if self.cdc:
-                if raw.get("cdf"):
-                    # recorded change files ARE the commit's complete
-                    # row-level change set — stream exactly those
-                    import os as _os
-
-                    for p in raw["cdf"]:
-                        out.append(_FileSlice(
-                            _os.path.join(self.path, p), sj, self.mapping,
-                            kind="cdf", version=v,
-                        ))
-                    continue
-                added, changed = _added_files(self.path, v, raw=raw)
-                if changed and not self.ignore_changes:
-                    raise ValueError(
-                        f"commit {v} of {self.path} removed or hid rows "
-                        "without recorded change files — enable the "
-                        "cdf.enabled table property BEFORE such commits "
-                        "(txn_set_properties) so MERGE/DELETE record "
-                        "their changes, or pass ignore_changes=true to "
-                        "stream only the added files"
-                    )
-                for f in added:
-                    out.append(_FileSlice(
-                        _abs_file(self.path, f), sj, self.mapping,
-                        kind="insert", version=v,
-                    ))
+            if self.cdc and raw.get("cdf"):
+                # recorded change files ARE the commit's complete
+                # row-level change set — stream exactly those
+                for p in raw["cdf"]:
+                    ap = os.path.join(self.path, p)
+                    slices.append((ap, os.path.getsize(ap), "cdf", v))
                 continue
-            added, changed = _added_files(self.path, v, raw=raw)
+            delta = _commit_file_delta(self.path, v, raw)
+            if delta is None:
+                # no baseline: the commit's delta is unknowable, and an
+                # empty one would re-emit every already-delivered row
+                raise ValueError(
+                    f"commit {v - 1} of {self.path} (the baseline for "
+                    f"commit {v}) was vacuumed away — restart the stream "
+                    f"with start_version >= {v}"
+                )
+            added, changed = delta
             if changed and not self.ignore_changes:
                 raise ValueError(
+                    f"commit {v} of {self.path} removed or hid rows "
+                    "without recorded change files — enable the "
+                    "cdf.enabled table property BEFORE such commits "
+                    "(txn_set_properties) so MERGE/DELETE record "
+                    "their changes, or pass ignore_changes=true to "
+                    "stream only the added files"
+                    if self.cdc else
                     f"commit {v} of {self.path} removed or hid rows "
                     "(overwrite/replace_where/MERGE/DELETE) — not an "
                     "append; pass ignore_changes=true to stream its "
@@ -297,13 +247,26 @@ class TxnStreamReader(DataSourceStreamReader):
                     "re-emits), or consume txn_changes_since for CDC "
                     "(or txn_readstream(cdc=True) with cdf.enabled)"
                 )
+            kind = "insert" if self.cdc else None
             for f in added:
-                out.append(
-                    _FileSlice(_abs_file(self.path, f), sj, self.mapping)
+                ap = _abs_file(self.path, f)
+                slices.append(
+                    (ap, f.get("bytes") or os.path.getsize(ap), kind, v)
                 )
-        return out
+        packs, cur, size = [], [], 0
+        for ap, nbytes, kind, v in slices:
+            cost = nbytes + _OPEN_COST_BYTES
+            if cur and size + cost > _MAX_PARTITION_BYTES:
+                packs.append(cur)
+                cur, size = [], 0
+            cur.append((ap, kind, v))
+            size += cost
+        if cur:
+            packs.append(cur)
+        sj = self.schema.json()
+        return [_SlicePack(sj, self.mapping, p) for p in packs]
 
-    def read(self, partition: _FileSlice):
+    def read(self, partition: _SlicePack):
         import pyarrow as pa
         import pyarrow.parquet as pq
 
@@ -315,30 +278,31 @@ class TxnStreamReader(DataSourceStreamReader):
         # recorded change file itself on cdf slices), never resolved
         # through the column mapping
         arrow_target = to_arrow_schema(_plain_schema(target))
-        table = pq.read_table(partition.abs_path)
-        n = table.num_rows
-        cols = []
-        for field, spark_field in zip(arrow_target, target.fields):
-            if spark_field.name == "_change_type":
-                if partition.kind == "cdf":
-                    col = table.column("_change_type").cast(field.type)
-                else:
-                    col = pa.array(["insert"] * n, type=field.type)
-                cols.append(col)
-                continue
-            if spark_field.name == "_commit_version":
-                cols.append(
-                    pa.array([partition.version] * n, type=field.type)
+        for abs_path, kind, version in partition.slices:
+            table = pq.read_table(abs_path)
+            n = table.num_rows
+            cols = []
+            for field, spark_field in zip(arrow_target, target.fields):
+                if spark_field.name == "_change_type":
+                    if kind == "cdf":
+                        col = table.column("_change_type").cast(field.type)
+                    else:
+                        col = pa.array(["insert"] * n, type=field.type)
+                    cols.append(col)
+                    continue
+                if spark_field.name == "_commit_version":
+                    cols.append(pa.array([version] * n, type=field.type))
+                    continue
+                phys = partition.mapping.get(
+                    spark_field.name, spark_field.name
                 )
-                continue
-            phys = partition.mapping.get(spark_field.name, spark_field.name)
-            if phys in table.column_names:
-                col = table.column(phys).cast(field.type)
-            else:
-                # file predates an additive evolution: NULL backfill
-                col = pa.nulls(n, type=field.type)
-            cols.append(col)
-        yield from pa.table(cols, schema=arrow_target).to_batches()
+                if phys in table.column_names:
+                    col = table.column(phys).cast(field.type)
+                else:
+                    # file predates an additive evolution: NULL backfill
+                    col = pa.nulls(n, type=field.type)
+                cols.append(col)
+            yield from pa.table(cols, schema=arrow_target).to_batches()
 
     def commit(self, end: dict) -> None:
         pass  # offsets live in Spark's checkpoint; manifests are immutable
@@ -746,31 +710,31 @@ class _TxnWriterBase:
 
     def _publish_append(
         self, new_files: list[dict], meta: dict, app_version: int | None = None
-    ) -> int | None:
-        """txn_write's commit loop, reduced to the guarded fast path
-        (no stats, no partitions, identity mapping, no constraints).
-        The fast-path preconditions are RE-CHECKED against the live
-        head inside the loop: a constraint or column-DDL commit racing
-        this write must raise, not be silently erased by a manifest
-        built without those keys.
+    ) -> int:
+        """txn_write's commit, reduced to the guarded fast path (no
+        stats, no constraints, identity mapping). The fast-path
+        preconditions are RE-CHECKED against the live head on every
+        attempt: a constraint or column-DDL commit racing this write
+        must raise, not be silently erased by a manifest built without
+        those keys.
 
         ``app_version`` (the streaming sink's batch id) is checked
-        against the head's watermark for ``self.app_id`` inside the
-        loop: at or below it the batch already landed, so the staged
-        files are dropped and None is returned; otherwise the commit
-        records it (txn_write's idempotent-write rule)."""
+        against the head's watermark for ``self.app_id`` on every
+        attempt: at or below it the batch already landed, so the staged
+        files are dropped and the head version is returned; otherwise
+        the commit records it (txn_write's idempotent-write rule)."""
         import os as _os
         import shutil as _shutil
-        import time as _time
 
         from tdataframe_spark.sources.txn import (
             ConcurrentWriteError,
-            _carry_constraints,
+            _commit,
             _merge_schemas,
-            _publish,
+            _next_manifest,
         )
 
         schema_json = _plain_schema(self.schema).json()
+
         def _drop_staged():
             if new_files:
                 # entries all live under data/<commit_id>/...: remove
@@ -780,11 +744,11 @@ class _TxnWriterBase:
                     _os.path.join(self.path, d, cid), ignore_errors=True
                 )
 
-        for _ in range(50):
-            version, latest = txn_latest(self.path)
-            if app_version is not None and (latest or {}).get(
-                "apps", {}
-            ).get(self.app_id, -1) >= app_version:
+        def build(version, latest):
+            apps = (latest or {}).get("apps", {})
+            if app_version is not None and (
+                apps.get(self.app_id, -1) >= app_version
+            ):
                 _drop_staged()
                 return None
             blocker = _fastpath_blocker(latest, self.mode)
@@ -813,34 +777,25 @@ class _TxnWriterBase:
                         "re-run the write against the new layout"
                     )
             if self.mode == "overwrite":
-                live, dv, committed = [], [], schema_json
-            else:
-                live = list((latest or {}).get("files", []))
-                dv = list((latest or {}).get("dv", []))
-                committed = _merge_schemas(
-                    (latest or {}).get("schema"), schema_json
+                # like txn_write's overwrite: files, DVs, schema and
+                # retired physicals reset (constraints and generated
+                # rules are guarded absent; the rest carries over)
+                changes = dict(
+                    files=new_files, dv=[], schema=schema_json,
+                    retired_physical=None,
                 )
-            manifest = {
-                "version": version + 1,
-                "parent": version,
-                "ts": _time.time(),
-                "files": live + new_files,
-                "schema": committed,
-                "dv": dv,
-                "meta": meta,
-            }
-            # properties and writer watermarks ride every commit
-            # (constraints and generated rules are guarded absent)
-            _carry_constraints(manifest, latest)
+            else:
+                changes = dict(
+                    files=(latest or {}).get("files", []) + new_files,
+                    schema=_merge_schemas(
+                        (latest or {}).get("schema"), schema_json
+                    ),
+                )
             if app_version is not None:
-                manifest["apps"] = {
-                    **manifest.get("apps", {}), self.app_id: app_version
-                }
-            if _publish(self.path, version + 1, manifest):
-                return version + 1
-        raise ConcurrentWriteError(
-            f"gave up after 50 commit races on {self.path}"
-        )
+                changes["apps"] = {**apps, self.app_id: app_version}
+            return _next_manifest(version, latest, meta, **changes)
+
+        return _commit(self.path, build, "on")
 
     def _clean(self, messages) -> None:
         import os as _os

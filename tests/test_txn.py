@@ -2939,6 +2939,7 @@ def test_parquet_checkpoint_roundtrip_and_vacuum(spark, tmp_path):
     import glob
 
     from tdataframe_spark.sources.txn import (
+        _commit_file_delta,
         _load,
         _versions,
         txn_changes,
@@ -2946,7 +2947,6 @@ def test_parquet_checkpoint_roundtrip_and_vacuum(spark, tmp_path):
         txn_set_properties,
         txn_upsert,
     )
-    from tdataframe_spark.sources.txn_stream import _added_files
 
     path = str(tmp_path / "t")
     df = spark.createDataFrame([(i, i * 2) for i in range(40)], "k long, v long")
@@ -2978,7 +2978,7 @@ def test_parquet_checkpoint_roundtrip_and_vacuum(spark, tmp_path):
     assert txn_read(spark, path, version=v_pq).count() == 40 + 2 * (v_pq - 2)
     assert txn_changes(spark, path, v_pq - 1, v_pq).count() == 2
     # streaming source: the added-files diff for a pq-checkpoint commit
-    added, changed = _added_files(path, v_pq)
+    added, changed = _commit_file_delta(path, v_pq, _load(path, v_pq))
     assert len(added) == 1 and not changed  # limit() writes one file
     # merge + restore onto the pq snapshot
     txn_upsert(spark.createDataFrame([(1, 9)], "k long, v long"), path, ["k"])
@@ -3680,3 +3680,153 @@ def test_idempotent_skip_stages_nothing(spark, tmp_path):
               bloom_cols=["k"], bloom_bits=64)
     assert set(os.listdir(os.path.join(path, "data"))) == data_dirs
     assert set(os.listdir(os.path.join(path, "bloom"))) == blooms
+
+
+def _carry_base(spark, root, sink: bool) -> str:
+    """A small table whose head carries every table-state key (files,
+    schema, dv, retired_physical, constraints, generated, properties,
+    apps). The native sink refuses tables with constraints, generated
+    rules or retired physical names, so its base carries the rest."""
+    from tdataframe_spark.sources.txn import (
+        txn_add_constraint,
+        txn_add_generated_column,
+        txn_delete,
+        txn_drop_column,
+        txn_set_properties,
+    )
+
+    path = str(root / ("sink" if sink else "t"))
+    txn_write(
+        spark.createDataFrame(
+            [(k, float(k), 2 * k, 0) for k in range(6)],
+            "k long, v double, g long, x long",
+        ).coalesce(1),
+        path, app_id="loader", app_version=1,
+    )
+    if not sink:
+        txn_drop_column(path, "x")
+        txn_add_constraint(spark, path, "k_pos", "k >= 0")
+        txn_add_generated_column(spark, path, "g", "k * 2")
+    txn_set_properties(path, {"owner": "me"})
+    txn_delete(spark, path, "k = 3")
+    return path
+
+
+@pytest.fixture(scope="module")
+def carry_bases(spark, tmp_path_factory):
+    root = tmp_path_factory.mktemp("carry")
+    return {s: _carry_base(spark, root, s) for s in (False, True)}
+
+
+def _carry_cases():
+    from tdataframe_spark.sources import txn as T
+
+    def batch(spark, k):
+        return spark.createDataFrame(
+            [(k, float(k), 2 * k)], "k long, v double, g long"
+        )
+
+    return {
+        # case: (commit(spark, path), keys the commit owns)
+        "rename_column": (
+            lambda s, p: T.txn_rename_column(p, "v", "w"), {"schema"}),
+        "drop_column": (
+            lambda s, p: T.txn_drop_column(p, "v"),
+            {"schema", "retired_physical"}),
+        "add_constraint": (
+            lambda s, p: T.txn_add_constraint(s, p, "v_pos", "v >= 0"),
+            {"constraints"}),
+        "drop_constraint": (
+            lambda s, p: T.txn_drop_constraint(p, "k_pos"),
+            {"constraints"}),
+        "add_generated_column": (
+            lambda s, p: T.txn_add_generated_column(
+                s, p, "v", "cast(k as double)"),
+            {"generated"}),
+        "drop_generated_column": (
+            lambda s, p: T.txn_drop_generated_column(p, "g"),
+            {"generated"}),
+        "set_properties": (
+            lambda s, p: T.txn_set_properties(p, {"owner": "you"}),
+            {"properties"}),
+        "drop_app": (lambda s, p: T.txn_drop_app(p, "loader"), {"apps"}),
+        "restore": (
+            lambda s, p: T.txn_restore(p, 1),
+            {"files", "schema", "dv", "retired_physical", "constraints",
+             "generated"}),
+        "delete": (lambda s, p: T.txn_delete(s, p, "k = 4"), {"dv"}),
+        "purge": (
+            lambda s, p: T.txn_purge(s, p, min_deleted_ratio=0.0),
+            {"files", "dv"}),
+        "append": (
+            lambda s, p: txn_write(
+                batch(s, 10), p, app_id="loader", app_version=2),
+            {"files", "apps"}),
+        "overwrite": (
+            lambda s, p: txn_write(batch(s, 10), p, mode="overwrite"),
+            {"files", "schema", "dv", "retired_physical"}),
+        "upsert": (
+            lambda s, p: T.txn_upsert(batch(s, 1), p, ["k"]),
+            {"files", "dv"}),
+        "sink_batch": (
+            lambda s, p: batch(s, 10).withColumn("x", F.lit(0).cast("long"))
+            .write.format("txn_table").option("path", p).mode("append")
+            .save(),
+            {"files"}),
+    }
+
+
+@pytest.mark.parametrize("case", sorted(_carry_cases()))
+def test_every_commit_carries_table_state(spark, tmp_path, carry_bases, case):
+    """Every commit builds its manifest through one rule: the table-state
+    keys it does not own survive unchanged from the head (a commit that
+    drops one erases constraints, properties or a writer's watermark),
+    and no manifest carries a key outside the table-state and
+    per-commit sets."""
+    import shutil
+
+    from tdataframe_spark.sources.txn import (
+        _STATE_KEYS,
+        _materialize,
+        _versions,
+    )
+    from tdataframe_spark.sources.txn_stream import register_txn_stream
+
+    register_txn_stream(spark)
+    commit, owned = _carry_cases()[case]
+    sink = case == "sink_batch"
+    path = str(tmp_path / "t")
+    shutil.copytree(carry_bases[sink], path)
+    v0, head = txn_latest(path)
+    for k in _STATE_KEYS:
+        if not (sink and k in ("retired_physical", "constraints",
+                               "generated")):
+            assert head.get(k), f"base head lacks {k}"
+    commit(spark, path)
+    v1, new = txn_latest(path)
+    assert v1 == v0 + 1
+    for k in set(_STATE_KEYS) - owned:
+        assert new.get(k) == head.get(k), f"{case} changed {k}"
+    allowed = set(_STATE_KEYS) | {"version", "parent", "ts", "meta", "cdf"}
+    for v in _versions(path):
+        extra = set(_materialize(path, v)) - allowed
+        assert not extra, f"v{v} carries {sorted(extra)}"
+
+
+def test_clone_carries_table_state_but_not_watermarks(
+    spark, tmp_path, carry_bases
+):
+    """txn_clone's one deliberate exception to the table-state rule: a
+    clone is a new table, so writer watermarks do not carry over."""
+    from tdataframe_spark.sources.txn import _STATE_KEYS, txn_clone
+
+    src = carry_bases[False]
+    _, head = txn_latest(src)
+    txn_clone(src, str(tmp_path / "c"))
+    _, new = txn_latest(str(tmp_path / "c"))
+    for k in set(_STATE_KEYS) - {"files", "dv", "apps"}:
+        assert new.get(k) == head.get(k), f"clone changed {k}"
+    assert "apps" not in new
+    assert [f["path"] for f in new["files"]] == [
+        f["path"] for f in head["files"]
+    ]

@@ -158,7 +158,9 @@ def test_txn_sink_stream_is_exactly_once(spark, tmp_path):
     from tests.test_exactly_once import _crash_before_checkpoint_commit
 
     from tdataframe_spark.sources.txn import txn_latest
+    from tdataframe_spark.sources.txn_stream import register_txn_stream
 
+    register_txn_stream(spark)
     src, path, ck = (str(tmp_path / d) for d in ("src", "t", "ck"))
     ev = spark.range(8).select("id", (F.col("id") + 100).alias("w"))
     ev.repartition(2).write.parquet(src)
@@ -313,16 +315,20 @@ def test_txn_stream_refuses_vacuumed_fence_baseline(spark, tmp_path):
     no baseline — treating the missing parent as empty would count
     every cumulative file of the commit as 'added' and silently re-emit
     the whole table. The source must raise instead."""
-    from tdataframe_spark.sources.txn import _versions
-    from tdataframe_spark.sources.txn_stream import _added_files
+    from tdataframe_spark.sources.txn import (
+        _commit_file_delta,
+        _load,
+        _versions,
+    )
 
     path = str(tmp_path / "t")
     txn_write(spark.range(3), path)                       # v1
     txn_write(spark.range(3, 6), path, mode="overwrite")  # v2 head
     txn_vacuum(path, keep_versions=1, min_age_s=0)
     assert _versions(path) == [2]  # v1's manifest is gone
-    with pytest.raises(ValueError, match="vacuumed away"):
-        _added_files(path, 2)
+    # the shared commit-delta function reports the missing baseline as
+    # None; the stream source turns it into its "vacuumed away" error
+    assert _commit_file_delta(path, 2, _load(path, 2)) is None
     # and through the real source: a stream whose window starts exactly
     # at the vacuumed version must raise, never emit v2's cumulative files
     with pytest.raises(Exception, match="vacuumed away"):
@@ -678,3 +684,43 @@ def test_txn_stream_cdc_replays_across_purge_and_optimize(spark, tmp_path):
     out2, ck2 = str(tmp_path / "out2"), str(tmp_path / "ck2")
     _run(spark, path, out2, ck2, start_version=3)
     assert _rows(spark.read.parquet(out2)) == [(7, 14)]
+
+
+def test_txn_stream_packs_a_small_window_into_one_task(
+    spark, tmp_path, monkeypatch
+):
+    """Planning packs the window's files in order into read tasks of at
+    most 128 MB (Spark's file-source packing), so a small CDC window of
+    appended data files and recorded change files is ONE task, not one
+    per file. Driver-only: the reader is planned, never run."""
+    from tdataframe_spark.sources import txn_stream
+    from tdataframe_spark.sources.txn import (
+        _load,
+        txn_latest,
+        txn_set_properties,
+    )
+
+    path = str(tmp_path / "t")
+    rows = spark.range(12).select("id", (F.col("id") * 2).alias("v"))
+    txn_write(rows.filter("id < 6").repartition(3), path)   # v1
+    txn_set_properties(path, {"cdf.enabled": "true"})       # v2
+    txn_write(rows.filter("id >= 6").repartition(2), path)  # v3
+    txn_delete(spark, path, "id = 1")                       # v4: recorded
+    n1 = len(_load(path, 1)["files"])
+    n3 = len(txn_latest(path)[1]["files"]) - n1
+    n4 = len(_load(path, 4)["cdf"])
+    assert n1 > 1 and n3 > 1
+    opts = {"path": path, "cdc": "true"}
+    reader = txn_stream.TxnStreamReader(
+        txn_stream.TxnTableSource(opts).schema(), opts
+    )
+    parts = reader.partitions({"version": 0}, {"version": 4})
+    assert len(parts) == 1
+    assert [(kind, v) for _, kind, v in parts[0].slices] == (
+        [("insert", 1)] * n1 + [("insert", 3)] * n3 + [("cdf", 4)] * n4
+    )
+    # the packing bound splits in plan order: a bound below one file's
+    # cost gives every slice a task of its own
+    monkeypatch.setattr(txn_stream, "_MAX_PARTITION_BYTES", 1)
+    split = reader.partitions({"version": 0}, {"version": 4})
+    assert [p.slices for p in split] == [[s] for s in parts[0].slices]

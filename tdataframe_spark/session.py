@@ -5,12 +5,29 @@ one we would ship on a 1000-executor cluster: AQE on (runtime re-plan, skew
 join handling, partition coalescing), Arrow for any Python<->JVM data
 movement, UTC session timezone (determinism + oracle parity), and shuffle
 partitions sized to the parallelism at hand rather than the 200 default.
+
+In local mode every Python process Spark starts -- the UDF daemon, pandas and
+Arrow UDF workers, data-source planner runners, streaming source and sink
+runners -- goes through a two-line ``/bin/sh`` launcher that imports the
+driver's installed, byte-compiled PySpark. Without it Spark puts
+``$SPARK_HOME/python/lib/pyspark.zip`` first on every worker's ``PYTHONPATH``;
+the zip holds only ``.py`` files and zipimport caches no bytecode, so each
+fresh process recompiles PySpark (``import pyspark.sql, pyspark.worker``: ~1.2 s
+from the zip, ~0.4 s compiled, 4 cores). Results do not change, only where
+``pyspark``/``py4j`` are imported from. The launcher is skipped off a local
+master, when the driver's PySpark is not the JVM's version, and when the temp
+directory cannot execute scripts; see ``_install_worker_launcher``.
 """
 
 from __future__ import annotations
 
 import os
+import re
+import shlex
+import tempfile
 
+import pyspark
+from pyspark import SparkFiles
 from pyspark.sql import SparkSession
 
 
@@ -23,6 +40,14 @@ def get_spark(
     """Build (or fetch) a SparkSession with scale-appropriate defaults.
 
     ``cpus`` defaults to $SPARK_GRAFT_CPUS, then to the machine's CPU count.
+
+    On a local master the session's Python workers and runners start from the
+    driver's compiled PySpark instead of Spark's source-only ``pyspark.zip``
+    (module docstring). It is skipped when the driver's PySpark version differs
+    from the JVM's or the launcher script cannot be executed, and a second call
+    on a running session does not wrap it twice. ``PYTHONPATH`` or
+    ``spark.executorEnv.PYTHONPATH`` cannot do this: Spark appends both after
+    the zip.
     """
     if cpus is None:
         cpus = os.environ.get("SPARK_GRAFT_CPUS") or (os.cpu_count() or 4)
@@ -59,4 +84,52 @@ def get_spark(
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
-    return builder.getOrCreate()
+    spark = builder.getOrCreate()
+    _install_worker_launcher(spark)
+    return spark
+
+
+def _install_worker_launcher(spark: SparkSession) -> bool:
+    """Start the Python processes Spark launches from the driver's PySpark.
+
+    Writes a ``/bin/sh`` script into ``SparkFiles.getRootDirectory()``, which
+    Spark deletes at ``stop()``. The script prepends the directory holding the
+    driver's ``pyspark`` package to ``PYTHONPATH`` and ``exec``s the previous
+    ``sc.pythonExec`` with ``"$@"``; ``exec`` keeps the PID, so no extra process
+    is left behind. ``sc.pythonExec`` then points at the script. Every UDF,
+    UDTF and ``DataSource`` wrap reads ``sc.pythonExec`` when it is created, so
+    nothing else changes.
+
+    Returns False and changes nothing unless the master is local, the driver's
+    ``pyspark.__version__`` equals the JVM's ``spark.version`` (the worker
+    protocol must match the JVM, and the zip always does) and the script is
+    executable after ``chmod`` (a ``noexec`` temp mount falls back). It also
+    returns False when ``sc.pythonExec`` already is a launcher.
+
+    Rejected alternatives: ``spark.executorEnv.PYTHONPATH`` or a driver
+    ``PYTHONPATH`` (Spark appends both after the zip); rebuilding the zip with
+    bytecode, or pointing ``SPARK_HOME`` elsewhere (both edit or replace the
+    Spark install).
+    """
+    sc = spark.sparkContext
+    root = SparkFiles.getRootDirectory()
+    if (
+        not re.fullmatch(r"local(\[.*\])?", sc.master)
+        or pyspark.__version__ != spark.version
+        or os.path.dirname(sc.pythonExec) == root
+    ):
+        return False
+    site = os.path.dirname(os.path.dirname(pyspark.__file__))
+    fd, script = tempfile.mkstemp(prefix="python-", suffix=".sh", dir=root)
+    with os.fdopen(fd, "w") as f:
+        f.write(
+            "#!/bin/sh\n"
+            f'export PYTHONPATH={shlex.quote(site)}"${{PYTHONPATH:+:$PYTHONPATH}}"; '
+            f'exec {shlex.quote(sc.pythonExec)} "$@"\n'
+        )
+    os.chmod(script, 0o700)
+    if not os.access(script, os.X_OK):
+        os.remove(script)
+        return False
+    sc.pythonExec = script
+    return True

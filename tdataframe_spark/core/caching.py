@@ -23,7 +23,13 @@ from pyspark.sql import DataFrame
 
 
 def tie_cache_lifetimes(result: DataFrame, *caches: DataFrame) -> DataFrame:
-    """Unpersist ``caches`` when ``result`` is garbage-collected."""
+    """Unpersist ``caches`` when ``result`` is garbage-collected.
+
+    Callers must hold the returned DataFrame until the action that reads the
+    caches has run. A DataFrame derived from it (``result.select(...)``) does
+    not keep ``result`` alive: once the last reference to ``result`` goes, the
+    caches are unpersisted early and the action recomputes their subtrees.
+    """
 
     def _release(cs=list(caches)) -> None:
         for c in cs:

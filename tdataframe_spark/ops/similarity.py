@@ -934,9 +934,9 @@ def _pq_assign(
     subs = {}
     for s, cands in by_sub.items():
         cells, mat = _np_candidates(cands)
-        order = sorted((int(c), [float(x) for x in v]) for c, v in cands)
+        # row i of the shift is row i of the matrix: one sort orders both
         half = np.asarray(
-            [_half_self_dot(v) for _, v in order], dtype=np.float64
+            [_half_self_dot(v) for v in mat.tolist()], dtype=np.float64
         )
         subs[s] = (cells, mat, half)
 
@@ -1783,9 +1783,15 @@ def semdedup_assign(
     ``eps`` and the vector dim ride the index metadata; a batch with a
     different vector dim raises in-plan rather than NULL-degrading.
 
-    Scale shape: stateless projections + one broadcast (n_clusters rows)
-    + one shuffled equi-join on the cluster id; candidate volume is
-    batch_size × cluster_rep_count, never corpus-quadratic.
+    Scale shape: stateless projections + one narrow Arrow scoring stage
+    against the driver-held centroids (n_clusters rows) + one shuffled
+    equi-join on the cluster id; candidate volume is batch_size ×
+    cluster_rep_count, never corpus-quadratic.
+
+    Not fully lazy: declaring runs Spark jobs on the driver before
+    returning. ``meta.first()`` reads the index metadata (``eps`` and the
+    dim are baked into the plan as literals), and ``collect()`` on the
+    centroid table pulls the centroids into the scorer's task closure.
     """
     spark = new_df.sparkSession
     meta = spark.read.parquet(f"{index_path}/meta").first()

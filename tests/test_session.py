@@ -1,5 +1,6 @@
 """The session's Python workers and runners import the driver's compiled
-PySpark, not the source-only ``pyspark.zip`` Spark puts first on their path."""
+PySpark, not the source-only ``pyspark.zip`` Spark puts first on their path,
+and its codegen class cache holds a plan cycle larger than Spark's default."""
 
 import os
 
@@ -7,7 +8,7 @@ import pyspark
 from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
 
 from tdataframe_spark import session
-from tdataframe_spark.session import get_spark
+from tdataframe_spark.session import CODEGEN_CACHE_ENTRIES, get_spark
 
 
 def _from_zip(path):
@@ -79,3 +80,23 @@ def test_launcher_wraps_previous_exec_only_on_matching_version(spark, monkeypatc
         script = f.read()
     assert 'exec python-under-test "$@"' in script
     assert os.path.dirname(os.path.dirname(pyspark.__file__)) in script
+
+
+def test_repeated_plan_cycle_compiles_nothing(spark):
+    # 150 distinct whole-stage classes. Spark's default cache of 100 entries is
+    # four LRU segments of 25, and a cycle this long overflows every segment:
+    # at the default the second round recompiles all 150.
+    compiles = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+
+    def one_round():
+        before = compiles.getCount()
+        for i in range(150):
+            df = spark.range(0, 1, 1, 1).selectExpr(f"id * 7919 + {i} AS v")
+            # planning a fresh DataFrame for execution compiles its class on
+            # the driver (or finds it in the cache); no job runs
+            df._jdf.queryExecution().executedPlan().execute()
+        return compiles.getCount() - before
+
+    assert one_round() >= 150
+    assert one_round() == 0
+    assert spark.conf.get("spark.sql.codegen.cache.maxEntries") == str(CODEGEN_CACHE_ENTRIES)

@@ -162,27 +162,10 @@ def _centroid_struct_df(spark, cents) -> DataFrame:
     )
 
 
-def _argmax_cell(scored_arr):
-    """Fold an ascending-cell array of (__cell, __sc) structs to the
-    max-score struct, ties to the LOWEST cell (strict > over an ascending
-    scan == the old ``max_by(cell, struct(score, -cell))`` ordering,
-    score-for-score bit-identical because the fold compares the same
-    double values the aggregate compared)."""
-    init = F.struct(
-        F.lit(-1).cast("int").alias("__cell"),
-        F.lit(float("-inf")).alias("__sc"),
-    )
-    return F.aggregate(
-        scored_arr,
-        init,
-        lambda acc, s: F.when(s["__sc"] > acc["__sc"], s).otherwise(acc),
-    )
-
-
 def _scored_cells(vec_field: str):
     """(__cell, __sc) struct array: each broadcast candidate scored by
-    dot against the row's ``vec_field`` — input to the argmax/top-n
-    folds. Requires a ``__cands`` column (crossJoin of a 1-row
+    dot against the row's ``vec_field`` — input to the top-n fold.
+    Requires a ``__cands`` column (crossJoin of a 1-row
     candidates frame)."""
     return F.transform(
         F.col("__cands"),
@@ -194,14 +177,13 @@ def _scored_cells(vec_field: str):
 
 
 # ---------------------------------------------------------------------------
-# Arrow-batched assignment scoring. The per-row argmax fold above is a
-# higher-order function — CodegenFallback, i.e. INTERPRETED expression
-# evaluation — and profiling put ~45% of every Lloyd iteration in those
-# interpreted dot products (r11 verdict item 1). The scorer below moves
-# the same arithmetic into numpy over Arrow batches (guide §4.2: hand
-# whole batches to vectorized native code) with a bit-identity argument,
-# not a tolerance: every float op is the same correctly-rounded IEEE-754
-# double the JVM fold produced, in the same order.
+# Arrow-batched assignment scoring. A per-row argmax over
+# ``_scored_cells`` is a higher-order function — CodegenFallback, i.e.
+# INTERPRETED expression evaluation — and profiling put ~45% of every
+# Lloyd iteration in those interpreted dot products. The scorer below
+# does the same arithmetic in numpy over Arrow batches (hand whole
+# batches to vectorized native code): every float op is the same
+# correctly-rounded IEEE-754 double ``dot`` produces, in the same order.
 
 
 def _np_candidates(cents):
@@ -219,21 +201,21 @@ def _np_candidates(cents):
 
 
 def _np_fold_argmax(vecs, cells, mat, shift=None):
-    """Per-row winning cell over the candidates in ``mat``, bit-identical
-    to the JVM fold ``_argmax_cell(_scored_cells(...))``:
+    """Per-row winning cell over the candidates in ``mat``: a strict
+    ``>`` scan over the cells in ascending order, so ties go to the
+    lowest cell, NaN ranks greatest, and all ``-inf`` scores give -1.
 
     - scores accumulate dimension-by-dimension from a 0.0 init, exactly
       the ordered left fold ``dot`` performs — numpy's elementwise
       multiply and add are the same correctly-rounded IEEE-754 ops (no
       FMA, no pairwise reassociation: each dimension is its own
       vectorized multiply-then-add);
-    - the winner is the FIRST occurrence of the maximum (np.argmax), and
-      candidates are cell-ascending — the fold's strict-``>`` scan that
-      breaks ties to the lowest cell;
+    - the winner is the FIRST occurrence of the maximum (np.argmax) over
+      cell-ascending candidates — the strict-``>`` scan;
     - NaN ranks greatest (Spark comparison semantics: ``NaN > x`` for
       every non-NaN x; np.argmax likewise returns the first NaN);
-    - a row every candidate of which loses to the fold's (-1, -inf)
-      init — all scores exactly -inf — yields -1.
+    - a row whose scores are all exactly -inf yields -1: no score beats
+      the scan's (-1, -inf) start.
 
     ``shift`` (per-candidate double, PQ's precomputed ||c||²/2) is
     subtracted once after the fold, exactly like ``dot(...) - __half``.

@@ -5629,6 +5629,7 @@ def q_rollup_incremental(spark, sf):
     proves the incremental path is bit-identical to full recompute
     (mergeable decimal partials)."""
     import os
+    import shutil
     import tempfile
 
     from tdataframe_spark.ops.rollup import (
@@ -5638,12 +5639,14 @@ def q_rollup_incremental(spark, sf):
     )
 
     ev = _events(spark, sf).select("ts_us", "event_type", "value")
-    # one FIXED per-process state dir, rebuilt (mode=overwrite) each call:
-    # a fresh mkdtemp per invocation leaked a parquet tree every time the
-    # bench/gate re-ran this query
+    # one FIXED per-process state dir, cleared before each build: a fresh
+    # mkdtemp per invocation leaked a tree every time the bench/gate
+    # re-ran this query, and a txn overwrite alone would keep every
+    # earlier call's versions
     path = os.path.join(
         tempfile.gettempdir(), f"rollup_state_{os.getpid()}"
     )
+    shutil.rmtree(path, ignore_errors=True)
     build_rollup(ev.where(F.col("ts_us") % 2 == 0), path, group_cols=["event_type"])
     refresh_rollup(ev.where(F.col("ts_us") % 2 != 0), path, group_cols=["event_type"])
     return serve_rollup(spark, path, ["event_type"])

@@ -1,10 +1,10 @@
 """Minimal transactional parquet table — an Iceberg/Delta-shaped
 manifest/commit-log over plain parquet files.
 
-The directory-swap sinks (``streaming/ops.py``, ``sources/layout.py``)
-are single-writer and had a disclosed crash window between state swap
-and applied-batch marker. This layer replaces both with the standard
-lakehouse commit protocol, scaled down to what the engine needs:
+Plain-directory state written by swapping directories is single-writer
+and has a crash window between a state swap and any applied-batch
+record. This layer replaces that with the standard lakehouse commit
+protocol, scaled down to what the engine needs:
 
 ``table_root/
     data/<commit-id>/[__p_day=5/]part-*.parquet   immutable data files
@@ -46,8 +46,9 @@ compressed columnar file instead of parsing one giant JSON string.
   micro-batch id. Every manifest carries the per-app watermark
   (``apps``, Delta's SetTransaction), so the applied batch id becomes
   visible atomically WITH the state change, and a replayed batch at or
-  below the head's watermark commits nothing. This closes the
-  swap-then-marker window the ``_staged_swap`` sinks disclosed; the
+  below the head's watermark commits nothing. Every fold sink's state
+  (sketches, rollup, CDC upsert, signature indexes) is such a table,
+  so this is the one replay fence for incremental state; the
   watermark rides the head, so no older manifest has to survive
   ``txn_vacuum`` to keep it.
 
@@ -359,6 +360,23 @@ def _materialize(path: str, version: int, raw: dict | None = None) -> dict:
         state["dv"] = list(dv.values())
         _cache_state(path_key, cv, csig, state)
     return _copy(state)
+
+
+def _refuse_plain_table(path: str, what: str) -> None:
+    """Raise if ``path`` is not a txn table but holds plain parquet
+    files, flat or hive-partitioned: the first commit there would
+    silently shadow those rows from the manifest view."""
+    import glob
+
+    if not is_txn_table(path) and (
+        glob.glob(os.path.join(path, "*.parquet"))
+        or glob.glob(os.path.join(path, "*", "*.parquet"))
+    ):
+        raise ValueError(
+            f"{path} holds a plain parquet table; {what} would silently "
+            "drop its rows — migrate it with "
+            "txn_write(spark.read.parquet(path), fresh_path) first"
+        )
 
 
 def _hint_path(path: str) -> str:
@@ -2963,8 +2981,8 @@ def txn_upsert(
     post-merge, never between; pinned snapshots unaffected). Within the
     batch, ``order_col`` picks the winning version per key (last-wins);
     without it the batch must be key-unique. The batch counterpart of
-    ``streaming.ops.stream_upsert_to_parquet(txn=True)``. Returns the
-    committed version.
+    ``streaming.ops.stream_upsert_to_parquet``. Returns the committed
+    version.
 
     ``rewrite`` picks the physical strategy (identical results):
 
@@ -3017,8 +3035,6 @@ def txn_upsert(
     applied micro-batch's merge): a replay of an applied version
     returns the current head before the probe or any rewrite; see
     :func:`txn_write`'s idempotent-writes contract."""
-    import glob
-
     from pyspark.sql import Window
 
     if on_conflict not in ("raise", "rebase"):
@@ -3191,15 +3207,7 @@ def txn_upsert(
         survivors = current.join(drop_keys, keys, "left_anti")
         merged = survivors.unionByName(batch, allowMissingColumns=True)
     else:
-        if os.path.isdir(path) and (
-            glob.glob(os.path.join(path, "*.parquet"))
-            or glob.glob(os.path.join(path, "*", "*.parquet"))
-        ):
-            raise ValueError(
-                f"{path} holds a plain parquet table; txn_upsert would "
-                "silently drop its rows — migrate it with "
-                "txn_write(spark.read.parquet(path), fresh_path) first"
-            )
+        _refuse_plain_table(path, "txn_upsert")
         version = 0
         merged = batch
         record_cdf = False

@@ -241,69 +241,9 @@ def _ckpt_id(checkpoint: str) -> str:
     return hashlib.md5(os.path.abspath(checkpoint).encode()).hexdigest()[:12]
 
 
-def _once_ledger(path: str, checkpoint: str, what: str, data_dir: str | None = None):
-    """Shared exactly-once machinery for foreachBatch sinks that FOLD
-    state (a replayed batch must not re-apply): an applied-batch ledger at
-    ``path/_applied`` plus a checkpoint-owner check (batch ids only
-    identify batches within the checkpoint lineage that produced them, so
-    folding a foreign checkpoint's stream into existing state would
-    silently skip or double-count — the first build records the owner and
-    a mismatch raises). Returns ``(already_applied, record, stamp_for)``:
-    ``already_applied(batch_id)`` performs the owner check and answers
-    whether the batch was folded before; ``record(batch_id)`` stamps the
-    owner (first time) and the batch marker AFTER a successful fold;
-    ``stamp_for(batch_id)`` is the owner-qualified stamp the sink passes
-    to ``_staged_swap`` so the applied-batch id lands INSIDE the staged
-    state and becomes visible atomically with the swap rename. That stamp
-    closes the old swap-then-marker crash window: a replay after a crash
-    between swap and ``record`` finds its own stamp at
-    ``data_dir/_applied_batch``, self-heals the marker, and skips — the
-    batch can never re-fold. Structured Streaming applies batches in
-    order (batch N's foreachBatch completes before N is committed and
-    N+1 starts), so at most the LAST batch can be in that window — one
-    stamp suffices.
-    """
-    import os
-
-    ckpt_id = _ckpt_id(checkpoint)
-    marker_dir = os.path.join(path, "_applied")
-    owner_file = os.path.join(marker_dir, "_owner")
-
-    def record(batch_id: int) -> None:
-        os.makedirs(marker_dir, exist_ok=True)
-        if not os.path.exists(owner_file):
-            with open(owner_file, "w") as f:
-                f.write(ckpt_id)
-        open(os.path.join(marker_dir, f"batch-{batch_id}"), "w").close()
-
-    def stamp_for(batch_id: int) -> str:
-        return f"{ckpt_id}:{batch_id}"
-
-    def already_applied(batch_id: int) -> bool:
-        if os.path.exists(owner_file):
-            owner = open(owner_file).read().strip()
-            if owner != ckpt_id:
-                raise ValueError(
-                    f"{what} at {path} is owned by checkpoint {owner}; "
-                    f"refusing to fold stream {ckpt_id} into it — reuse "
-                    "the original checkpoint or build a fresh state path"
-                )
-        if os.path.exists(os.path.join(marker_dir, f"batch-{batch_id}")):
-            return True
-        if data_dir is not None:
-            stamp_file = os.path.join(data_dir, "_applied_batch")
-            if os.path.exists(stamp_file):
-                if open(stamp_file).read().strip() == stamp_for(batch_id):
-                    record(batch_id)  # self-heal the crashed marker write
-                    return True
-        return False
-
-    return already_applied, record, stamp_for
-
-
 def _txn_app(state_path: str, checkpoint: str, what: str) -> str:
-    """The ``app_id`` of a fold sink whose state is a transactional table:
-    ``what:<checkpoint id>``. Passed to the commit with
+    """The ``app_id`` of a fold sink, whose state is a transactional
+    table: ``what:<checkpoint id>``. Passed to the commit with
     ``app_version=batch_id``, the table's per-app watermark skips a
     replayed batch inside the commit loop, atomically. Batch ids only
     order batches within one checkpoint, so a head that already records
@@ -322,51 +262,32 @@ def _txn_app(state_path: str, checkpoint: str, what: str) -> str:
     return app
 
 
-def _staged_swap(data: str, build_merged, write_initial, stamp: str | None = None) -> None:
-    """Shared rename-aside overwrite for non-transactional parquet state:
-    recover a half-finished prior swap (retired copy is the last good
-    table), clear dead staging, then either write the initial table
-    (``write_initial(dest)`` — into staging, then renamed in) or
-    materialize ``build_merged()`` to staging and swap — at no instant is
-    ``data`` absent without a recoverable copy. ``stamp`` (the sink's
-    owner-qualified batch id) is written to ``staging/_applied_batch``
-    BEFORE the rename, so state and applied-batch marker become visible
-    in the same atomic step — a crash anywhere leaves either the old
-    state (batch re-folds, was never applied) or the new state carrying
-    its stamp (replay skips). Leading-underscore files are invisible to
-    Spark's parquet reader. For keyed MERGE state prefer the
-    transactional table (``sources/txn.py``); this swap remains for
-    whole-table sketch state where rewrite == the state size anyway.
-    """
-    import os
-    import shutil
+def _fold_sketch(
+    state: str, checkpoint: str, what: str, batch_id: int, first, merge
+) -> None:
+    """Fold one micro-batch into a whole-table sketch state: commit
+    ``first`` (the batch's own sketch) on the first batch, else
+    ``merge(current)`` over the version read, as ONE overwrite commit
+    pinned to that version and fenced by the per-app watermark
+    (``_txn_app``) — a replayed batch commits nothing. Plain parquet
+    state at ``state`` is refused, not shadowed. Superseded versions
+    stay until ``txn_vacuum``."""
+    from tdataframe_spark.sources.txn import (
+        _refuse_plain_table, txn_latest, txn_read, txn_write,
+    )
 
-    staging = data + ".__staging__"
-    retired = data + ".__old__"
-    if not os.path.exists(data) and os.path.exists(retired):
-        os.rename(retired, data)
-    if os.path.exists(staging):
-        shutil.rmtree(staging)
-
-    def _stamp(dest: str) -> None:
-        if stamp is not None:
-            with open(os.path.join(dest, "_applied_batch"), "w") as f:
-                f.write(stamp)
-                f.flush()
-                os.fsync(f.fileno())
-
-    if os.path.exists(data):
-        build_merged().write.mode("overwrite").parquet(staging)
-        _stamp(staging)
-        if os.path.exists(retired):
-            shutil.rmtree(retired)
-        os.rename(data, retired)
-        os.rename(staging, data)
-        shutil.rmtree(retired)
+    app = _txn_app(state, checkpoint, what)
+    version, head = txn_latest(state)
+    if head is None:
+        _refuse_plain_table(state, f"the {what} sink")
+        out = first
     else:
-        write_initial(staging)
-        _stamp(staging)
-        os.rename(staging, data)
+        out = merge(txn_read(first.sparkSession, state, version=version))
+    txn_write(
+        out, state, mode="overwrite", expected_version=version,
+        meta={"sink": what, "batch_id": batch_id},
+        app_id=app, app_version=batch_id,
+    )
 
 
 def _run_foreach_batch(result: DataFrame, fn, checkpoint: str, available_now: bool):
@@ -393,73 +314,38 @@ def stream_upsert_to_parquet(
     keys: list[str],
     order_col: str | None = None,
     available_now: bool = True,
-    txn: bool = False,
     delete_when: str | None = None,
 ):
     """Streaming CDC upsert: each micro-batch is MERGEd into the keyed
-    parquet table at ``path`` via ``foreachBatch`` — batch rows replace
-    same-key rows, new keys append. Within a batch, ``order_col`` picks the
-    winning version per key (last-wins); without it, batches are assumed
-    key-unique.
+    transactional table at ``path`` (``sources/txn.py``) via
+    ``foreachBatch`` — batch rows replace same-key rows, new keys
+    append. Within a batch, ``order_col`` picks the winning version per
+    key (last-wins); without it, batches are assumed key-unique.
 
-    The merge itself is the batch upsert shape (anti-join survivors ∪ batch)
-    — one shuffle on the keys. With ``txn=True`` the state is a
-    transactional manifest table (``sources/txn.py``): each merge is one
-    atomic commit that records the batch id in the table's per-app
-    watermark (``_txn_app``), giving exactly-once under crash AND
-    snapshot-isolated concurrent readers. The default writes a plain
-    parquet dir via the rename-aside swap (single-writer semantics; safe
-    here because a same-batch replay of this merge is idempotent —
-    anti-join + union of identical rows reproduces the same table).
+    Each merge is ``txn_upsert``: one atomic commit that records the
+    batch id in the table's per-app watermark (``_txn_app``), giving
+    exactly-once under crash AND snapshot-isolated concurrent readers
+    (read the state with ``txn_read``). A plain parquet table at
+    ``path`` is refused, not shadowed. Superseded versions stay until
+    ``txn_vacuum``.
 
-    ``delete_when`` (txn mode only): SQL predicate over the batch
-    columns marking TOMBSTONES — the streaming GDPR/retention delete
-    arm, forwarded to ``txn_upsert``'s WHEN MATCHED DELETE semantics so
-    one stream carries updates, inserts, and deletes, each micro-batch
-    one atomic commit.
+    ``delete_when``: SQL predicate over the batch columns marking
+    TOMBSTONES — the streaming GDPR/retention delete arm, forwarded to
+    ``txn_upsert``'s WHEN MATCHED DELETE semantics so one stream
+    carries updates, inserts, and deletes, each micro-batch one atomic
+    commit.
     """
-    if delete_when is not None and not txn:
-        raise ValueError(
-            "delete_when requires txn=True (the tombstone arm is a "
-            "transactional MERGE feature)"
-        )
-    from pyspark.sql import Window
+    from tdataframe_spark.sources.txn import txn_upsert
 
     def _merge(batch: DataFrame, batch_id: int) -> None:
-        spark = batch.sparkSession
-        if txn:
-            from tdataframe_spark.sources.txn import txn_upsert
-
-            # ONE MERGE implementation — txn_upsert owns the order_col
-            # last-wins dedup too; the watermark skips a replayed batch
-            txn_upsert(
-                batch, path, keys, order_col=order_col,
-                meta={"sink": "cdc_upsert", "batch_id": batch_id},
-                delete_when=delete_when,
-                app_id=_txn_app(path, checkpoint, "cdc_upsert"),
-                app_version=batch_id,
-            )
-            return
-
-        if order_col is not None:
-            w = Window.partitionBy(*keys).orderBy(F.col(order_col).desc())
-            batch = (
-                batch.withColumn("__rn", F.row_number().over(w))
-                .filter(F.col("__rn") == 1)
-                .drop("__rn")
-            )
-
-        def merged():
-            current = spark.read.parquet(path)
-            survivors = current.join(
-                batch.select(*keys).dropDuplicates(keys), keys, "left_anti"
-            )
-            return survivors.unionByName(batch)
-
-        _staged_swap(
-            path,
-            merged,
-            lambda dest: batch.write.mode("overwrite").parquet(dest),
+        # ONE MERGE implementation — txn_upsert owns the order_col
+        # last-wins dedup too; the watermark skips a replayed batch
+        txn_upsert(
+            batch, path, keys, order_col=order_col,
+            meta={"sink": "cdc_upsert", "batch_id": batch_id},
+            delete_when=delete_when,
+            app_id=_txn_app(path, checkpoint, "cdc_upsert"),
+            app_version=batch_id,
         )
 
     return _run_foreach_batch(result, _merge, checkpoint, available_now)
@@ -490,77 +376,41 @@ def stream_rollup_refresh(
     bucket_us: int = 3600 * 1_000_000,
     group_cols: list[str] | None = None,
     available_now: bool = True,
-    txn: bool = True,
 ):
     """Streaming continuous aggregate: every micro-batch folds into the
     persisted time-bucket rollup — reads and rewrites only the day
     partitions the batch touches, so sink cost tracks the batch, not
     history.
 
-    Exactly-once (default ``txn=True``): the state is a transactional
-    manifest table (``sources/txn.py``) and every refresh — including
-    the multi-day partition replacement — is ONE atomic commit that
-    records the batch id in the table's per-app watermark. A replayed
-    batch (foreachBatch is at-least-once after a crash) finds its id at
-    or below the watermark on the head and commits nothing; because the
-    id becomes visible atomically WITH the state change, there is no
-    crash instant where the fold happened but the watermark doesn't
-    know it. The legacy ``txn=False`` path keeps the
-    plain ``day=`` directory layout with the after-the-fact marker
-    ledger — and that scheme's disclosed window (a crash between
-    state-write and marker-write re-folds the batch, and a crash mid
-    dynamic-partition-overwrite can leave PARTIAL day updates).
+    Exactly-once: the state is a transactional table (``sources/txn.py``,
+    read it with ``serve_rollup``) and every refresh — including the
+    multi-day partition replacement — is ONE atomic commit that records
+    the batch id in the table's per-app watermark. A replayed batch
+    (foreachBatch is at-least-once after a crash) finds its id at or
+    below the watermark on the head and commits nothing; because the id
+    becomes visible atomically WITH the state change, there is no crash
+    instant where the fold happened but the watermark doesn't know it.
+    Superseded versions stay until ``txn_vacuum``.
 
     The rollup path is OWNED by one checkpoint lineage: batch ids only
     identify batches within the checkpoint that produced them, so folding
     a different checkpoint's stream into existing state would either
     silently skip (id collision) or double-count (full source replay).
-    The owner is the checkpoint whose watermark the state records (the
-    marker ledger's ``_owner`` file on the legacy path); a mismatch
-    raises instead.
+    The owner is the checkpoint whose watermark the state records; a
+    mismatch raises instead. A plain-directory rollup at ``path`` is
+    refused, not shadowed.
     """
-    import os
-
-    # legacy-layout auto-detect: a pre-existing plain day= directory keeps
-    # the marker-ledger path even under the txn default — a restarted
-    # deployment must keep running, not die in its first micro-batch
-    # (build_rollup_txn refuses to shadow plain state, correctly)
-    if txn and os.path.isdir(path) and any(
-        n.startswith("day=") for n in os.listdir(path)
-    ):
-        txn = False
-
-    if txn:
-        from tdataframe_spark.ops.rollup import build_rollup_txn, refresh_rollup_txn
-        from tdataframe_spark.sources.txn import is_txn_table
-
-        def _apply_txn(batch: DataFrame, batch_id: int) -> None:
-            fold = refresh_rollup_txn if is_txn_table(path) else build_rollup_txn
-            fold(
-                batch, path, value_col, bucket_us, group_cols,
-                meta={"sink": "rollup", "batch_id": batch_id},
-                app_id=_txn_app(path, checkpoint, "rollup"),
-                app_version=batch_id,
-            )
-
-        return _run_foreach_batch(events, _apply_txn, checkpoint, available_now)
-
-    already_applied, record, _ = _once_ledger(path, checkpoint, "rollup")
+    from tdataframe_spark.ops.rollup import build_rollup, refresh_rollup
+    from tdataframe_spark.sources.txn import is_txn_table
 
     def _apply(batch: DataFrame, batch_id: int) -> None:
-        from tdataframe_spark.ops.rollup import build_rollup, refresh_rollup
-
-        if already_applied(batch_id):
-            return  # replayed batch: already folded in
-        if os.path.exists(os.path.join(path, "_SUCCESS")) or any(
-            n.startswith("day=") for n in (
-                os.listdir(path) if os.path.exists(path) else []
-            )
-        ):
-            refresh_rollup(batch, path, value_col, bucket_us, group_cols)
-        else:
-            build_rollup(batch, path, value_col, bucket_us, group_cols)
-        record(batch_id)
+        fold = refresh_rollup if is_txn_table(path) else build_rollup
+        fold(
+            batch, path, value_col, bucket_us, group_cols,
+            meta={"sink": "rollup", "batch_id": batch_id},
+            app_id=_txn_app(path, checkpoint, "rollup"),
+            app_version=batch_id,
+        )
 
     return _run_foreach_batch(events, _apply, checkpoint, available_now)
 
@@ -580,41 +430,25 @@ def stream_cms_refresh(
     the result is EXACTLY the sketch a one-shot batch build over all
     streamed data would produce (tested). State is ≤ depth×width rows
     whatever the stream length; ``cms_query``/``heavy_hitters``-style
-    probes read the sketch table directly. This is the streaming feed of
-    the frequency surfaces: hot-key discovery, df-cut inputs, skew
-    monitors.
+    probes read the sketch table (``txn_read``) directly. This is the
+    streaming feed of the frequency surfaces: hot-key discovery, df-cut
+    inputs, skew monitors.
 
-    Exactly-once + ownership: same applied-batch ledger and
-    checkpoint-owner check as the other fold sinks (a replayed batch
-    must not double-count; a foreign checkpoint's stream must not fold
-    in), and the rename-aside swap keeps the sketch recoverable at every
-    crash instant. The batch stamp is written INSIDE the staged state, so
-    state and applied-marker become visible in one atomic rename — the
-    old swap-then-marker window (a crash between them re-folded the
-    batch, double-counting the CMS) is closed; a replay finds its stamp,
-    self-heals the marker, and skips.
+    Exactly-once + ownership: the sketch is a transactional table and
+    each batch is one overwrite commit fenced by the per-app watermark
+    (``_fold_sketch``) — a replayed batch commits nothing, a foreign
+    checkpoint's stream is refused.
     """
     import os
-
-    data = os.path.join(path, "sketch")
-    already_applied, record, stamp_for = _once_ledger(
-        path, checkpoint, "cms sketch", data_dir=data
-    )
 
     def _apply(batch: DataFrame, batch_id: int) -> None:
         from tdataframe_spark.functions.sketches import cms_build, cms_merge
 
-        spark = batch.sparkSession
-        if already_applied(batch_id):
-            return  # replayed batch: already folded in
         delta = cms_build(batch, col, depth=depth, width=width)
-        _staged_swap(
-            data,
-            lambda: cms_merge(spark.read.parquet(data), delta),
-            lambda dest: delta.write.mode("overwrite").parquet(dest),
-            stamp=stamp_for(batch_id),
+        _fold_sketch(
+            os.path.join(path, "sketch"), checkpoint, "cms", batch_id,
+            delta, lambda cur: cms_merge(cur, delta),
         )
-        record(batch_id)
 
     return _run_foreach_batch(events, _apply, checkpoint, available_now)
 
@@ -633,35 +467,24 @@ def stream_dds_refresh(
     sketch persisted at ``path/sketch`` — by the DDSketch merge law the
     result is EXACTLY the one-shot batch sketch over all streamed data
     (bucket counts are plain sums), so ``dds_quantiles`` over the
-    persisted table serves live percentiles (latency SLOs, price
-    distributions) with alpha relative error at O(log range) state per
-    group, whatever the stream length. Same exactly-once ledger +
-    rename-aside swap as the CMS/HLL/top-k folds."""
+    persisted table (``txn_read``) serves live percentiles (latency
+    SLOs, price distributions) with alpha relative error at O(log range)
+    state per group, whatever the stream length. Same watermark-fenced
+    transactional state as the CMS/HLL/top-k folds."""
     import os
-
-    data = os.path.join(path, "sketch")
-    already_applied, record, stamp_for = _once_ledger(
-        path, checkpoint, "dds sketch", data_dir=data
-    )
 
     def _apply(batch: DataFrame, batch_id: int) -> None:
         from tdataframe_spark.functions.sketches import dds_build, dds_merge
 
-        spark = batch.sparkSession
-        if already_applied(batch_id):
-            return  # replayed batch: already folded in
         # persist: dds_merge's mixed-alpha guard runs one job over the
         # union BEFORE the merged write — without the cache the batch
         # aggregation would run twice per micro-batch
         delta = dds_build(batch, col, alpha=alpha, by=by).persist()
         try:
-            _staged_swap(
-                data,
-                lambda: dds_merge(spark.read.parquet(data), delta),
-                lambda dest: delta.write.mode("overwrite").parquet(dest),
-                stamp=stamp_for(batch_id),
+            _fold_sketch(
+                os.path.join(path, "sketch"), checkpoint, "dds", batch_id,
+                delta, lambda cur: dds_merge(cur, delta),
             )
-            record(batch_id)
         finally:
             delta.unpersist()
 
@@ -682,50 +505,27 @@ def stream_hll_refresh(
     ``path/sketches`` — state is one binary sketch row per group forever,
     whatever the stream length. Probe with
     ``functions.sketches.hll_estimate`` (or ``merge_distinct_sketches``
-    to roll up to coarser groups) without touching the stream. Same
-    exactly-once ledger + owner check + stamped rename-aside swap as the
-    CMS sink (shared helpers): the applied-batch stamp rides the staged
-    state through the atomic rename, so a crash-then-replay can never
-    re-fold a batch (HLL max-merge is idempotent anyway — the stamp
-    matters for uniformity with the counting sinks).
+    to roll up to coarser groups) over ``txn_read`` of the state without
+    touching the stream. Same watermark-fenced transactional state as
+    the CMS sink (HLL max-merge is idempotent anyway — the fence matters
+    for uniformity with the counting sinks).
     """
     import os
 
-    from pyspark.sql import functions as F
+    from tdataframe_spark.functions.sketches import hll_merge, hll_sketch
 
     groups = list(group_cols or [])
-    data = os.path.join(path, "sketches")
-    already_applied, record, stamp_for = _once_ledger(
-        path, checkpoint, "hll sketches", data_dir=data
-    )
+
+    def _sketches(df: DataFrame, agg) -> DataFrame:
+        return df.groupBy(*groups).agg(agg.alias("sketch"))
 
     def _apply(batch: DataFrame, batch_id: int) -> None:
-        from tdataframe_spark.functions.sketches import hll_merge, hll_sketch
-
-        spark = batch.sparkSession
-        if already_applied(batch_id):
-            return  # replayed batch: already folded in
-        if groups:
-            delta = batch.groupBy(*groups).agg(
-                hll_sketch(col, lgk).alias("sketch")
-            )
-        else:
-            delta = batch.agg(hll_sketch(col, lgk).alias("sketch"))
-
-        def merged():
-            prev = spark.read.parquet(data)
-            u = prev.unionByName(delta)
-            if groups:
-                return u.groupBy(*groups).agg(hll_merge("sketch").alias("sketch"))
-            return u.agg(hll_merge("sketch").alias("sketch"))
-
-        _staged_swap(
-            data,
-            merged,
-            lambda dest: delta.write.mode("overwrite").parquet(dest),
-            stamp=stamp_for(batch_id),
+        delta = _sketches(batch, hll_sketch(col, lgk))
+        _fold_sketch(
+            os.path.join(path, "sketches"), checkpoint, "hll", batch_id,
+            delta,
+            lambda cur: _sketches(cur.unionByName(delta), hll_merge("sketch")),
         )
-        record(batch_id)
 
     return _run_foreach_batch(events, _apply, checkpoint, available_now)
 
@@ -741,47 +541,32 @@ def stream_topk_refresh(
     available_now: bool = True,
 ):
     """Streaming top-k leaderboard: the persisted state at ``path/topk``
-    always holds each group's k largest ``order_col`` rows seen so far —
-    union the batch, re-take top-k, swap. State is ≤ k rows per group
-    forever; a replayed batch cannot perturb it twice (same exactly-once
-    ledger/owner/stamped-swap machinery as the other fold sinks; here
-    even a re-fold would be harmless — re-taking top-k over a re-unioned
-    batch is idempotent). Pass ``tie_cols`` (ascending) to make the cut at rank k
-    deterministic when ``order_col`` has ties — without it, tied rows at
-    the boundary are an arbitrary-but-ledgered choice.
+    (a transactional table; read it with ``txn_read``) always holds each
+    group's k largest ``order_col`` rows seen so far — union the batch,
+    re-take top-k, commit. State is ≤ k rows per group forever; a
+    replayed batch commits nothing (the same watermark-fenced state as
+    the other fold sinks; here even a re-fold would be harmless —
+    re-taking top-k over a re-unioned batch is idempotent). Pass
+    ``tie_cols`` (ascending) to make the cut at rank k deterministic
+    when ``order_col`` has ties — without it, tied rows at the boundary
+    are an arbitrary choice.
     """
     import os
 
-    from pyspark.sql import functions as F
+    from tdataframe_spark.operators.windows import top_per_group
 
-    data = os.path.join(path, "topk")
-    already_applied, record, stamp_for = _once_ledger(
-        path, checkpoint, "topk leaderboard", data_dir=data
-    )
+    order = [F.col(order_col).desc()] + [
+        F.col(c).asc() for c in (tie_cols or [])
+    ]
+
+    def refreshed(src: DataFrame) -> DataFrame:
+        return top_per_group(src, key_cols, order, k=k).drop("rnk")
 
     def _apply(batch: DataFrame, batch_id: int) -> None:
-        from tdataframe_spark.operators.windows import top_per_group
-
-        spark = batch.sparkSession
-        if already_applied(batch_id):
-            return
-
-        order = [F.col(order_col).desc()] + [
-            F.col(c).asc() for c in (tie_cols or [])
-        ]
-
-        def refreshed(src: DataFrame) -> DataFrame:
-            return top_per_group(src, key_cols, order, k=k).drop("rnk")
-
-        _staged_swap(
-            data,
-            lambda: refreshed(
-                spark.read.parquet(data).unionByName(batch)
-            ),
-            lambda dest: refreshed(batch).write.mode("overwrite").parquet(dest),
-            stamp=stamp_for(batch_id),
+        _fold_sketch(
+            os.path.join(path, "topk"), checkpoint, "topk", batch_id,
+            refreshed(batch), lambda cur: refreshed(cur.unionByName(batch)),
         )
-        record(batch_id)
 
     return _run_foreach_batch(events, _apply, checkpoint, available_now)
 

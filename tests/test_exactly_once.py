@@ -1,20 +1,21 @@
 """Kill-injection tests for the streaming fold sinks' exactly-once
 guarantee: simulate a crash AFTER the state change but BEFORE the
-streaming checkpoint committed the batch (the window the round-5 design
-disclosed as double-counting for CMS and rollup), then restart. The
-replayed batch must be skipped — state identical to a one-shot build.
+streaming checkpoint committed the batch, then restart. The replayed
+batch must be skipped — state identical to a one-shot build, and no new
+commit on the state's txn table.
 
 The crash is injected the way it happens in production: the sink's
-state mutation completed, but ``<ckpt>/commits/<N>`` never landed, so
-Structured Streaming re-runs batch N with the same id on restart. For
-the marker-ledger sinks we ALSO delete the after-the-fact marker file
-(that write is exactly what a crash skips); the stamp inside the
-atomically-renamed state must fence the replay alone."""
+state commit landed, but ``<ckpt>/commits/<N>`` never did, so
+Structured Streaming re-runs batch N with the same id on restart. Every
+fold sink's state is a txn table, and the per-app watermark its commit
+carries (``app_id`` = ``<sink>:<checkpoint id>``, ``app_version`` =
+batch id) must fence the replay alone."""
 
 from __future__ import annotations
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 
@@ -46,60 +47,122 @@ def _crash_before_checkpoint_commit(ckpt: str) -> int:
     return int(last)
 
 
-def test_cms_sink_survives_crash_between_swap_and_marker(spark, tmp_path):
-    from tdataframe_spark.functions.sketches import cms_build, cms_query
-    from tdataframe_spark.streaming import stream_cms_refresh, stream_from_files
+def _sketch_sink(spark, kind: str):
+    """(run the ``kind`` sink over a stream into ``path``, the state
+    table's location under ``path``, one-shot batch build of the same
+    state, comparable form of a state table)."""
+    from tdataframe_spark.functions import sketches as sk
+    from tdataframe_spark.operators.windows import top_per_group
+    from tdataframe_spark.streaming import ops
 
+    def rows(df):
+        return sorted(sorted(r.asDict().items()) for r in df.collect())
+
+    if kind == "cms":
+        return (
+            lambda s, p, c: ops.stream_cms_refresh(
+                s.select("event_type"), p, c, "event_type", depth=3, width=64
+            ),
+            "sketch",
+            lambda ev: sk.cms_build(ev, "event_type", depth=3, width=64),
+            rows,
+        )
+    if kind == "dds":
+        return (
+            lambda s, p, c: ops.stream_dds_refresh(
+                s.select("value"), p, c, "value", alpha=0.02
+            ),
+            "sketch",
+            lambda ev: sk.dds_build(ev, "value", alpha=0.02),
+            rows,
+        )
+    if kind == "hll":
+        return (
+            lambda s, p, c: ops.stream_hll_refresh(
+                s, p, c, "ts_us", group_cols=["event_type"]
+            ),
+            "sketches",
+            lambda ev: sk.grouped_distinct_sketches(ev, ["event_type"], "ts_us"),
+            lambda df: rows(df.select(
+                "event_type", sk.hll_estimate(F.col("sketch")).alias("e")
+            )),
+        )
+    order = [F.col("value").desc(), F.col("ts_us").asc()]
+    return (
+        lambda s, p, c: ops.stream_topk_refresh(
+            s, p, c, ["event_type"], "value", k=3, tie_cols=["ts_us"]
+        ),
+        "topk",
+        lambda ev: top_per_group(ev, ["event_type"], order, k=3).drop("rnk"),
+        rows,
+    )
+
+
+@pytest.mark.parametrize("kind", ["cms", "dds", "hll", "topk"])
+def test_fold_sink_survives_crash_before_checkpoint_commit(spark, tmp_path, kind):
+    from tdataframe_spark.sources.txn import txn_latest, txn_read
+    from tdataframe_spark.streaming import stream_from_files
+
+    sink, sub, oneshot, canon = _sketch_sink(spark, kind)
     ev = _events(spark)
     src = str(tmp_path / "src")
     ev.repartition(4).write.parquet(src)
     batch_view = spark.read.parquet(src)
     path, ckpt = str(tmp_path / "state"), str(tmp_path / "ckpt")
+    state = os.path.join(path, sub)
 
-    def run():
-        stream = stream_from_files(
-            spark, src, batch_view.schema, max_files_per_trigger=1
-        )
-        stream_cms_refresh(
-            stream.select("event_type"), path, ckpt, "event_type",
-            depth=3, width=64,
+    def run(ck):
+        sink(
+            stream_from_files(spark, src, batch_view.schema, max_files_per_trigger=1),
+            path, ck,
         )
 
-    run()
-    items = batch_view.select("event_type").distinct()
-
-    def estimates():
-        return {
-            r["event_type"]: r["est"]
-            for r in cms_query(
-                spark.read.parquet(f"{path}/sketch"), items, "event_type"
-            ).collect()
-        }
-
-    oneshot = {
-        r["event_type"]: r["est"]
-        for r in cms_query(
-            cms_build(batch_view.select("event_type"), "event_type",
-                      depth=3, width=64),
-            items, "event_type",
-        ).collect()
-    }
-    assert estimates() == oneshot
-
-    # crash: swap happened (state + stamp live), marker write and the
-    # streaming checkpoint commit both lost
+    run(ckpt)
+    want = canon(oneshot(batch_view))
+    assert canon(txn_read(spark, state)) == want
+    v_before, m_before = txn_latest(state)
     replayed = _crash_before_checkpoint_commit(ckpt)
-    marker = os.path.join(path, "_applied", f"batch-{replayed}")
-    os.unlink(marker)
-    stamp = open(os.path.join(path, "sketch", "_applied_batch")).read()
-    assert stamp.endswith(f":{replayed}")
+    assert m_before["meta"]["batch_id"] == replayed  # fence rides the commit
 
-    run()  # restart: batch `replayed` re-runs; the stamp must fence it
-    assert estimates() == oneshot, "replayed batch double-counted the CMS"
-    assert os.path.exists(marker), "stamp hit should self-heal the marker"
+    run(ckpt)  # restart: batch `replayed` re-runs; the watermark must fence it
+    assert canon(txn_read(spark, state)) == want, "replayed batch re-folded"
+    assert txn_latest(state)[0] == v_before, "replay must not create a new commit"
+
+    with pytest.raises(Exception, match="owned by checkpoint"):
+        run(str(tmp_path / "other_ckpt"))
+    assert txn_latest(state)[0] == v_before
 
 
-def test_rollup_txn_sink_survives_crash_before_checkpoint_commit(spark, tmp_path):
+def test_fold_state_refuses_plain_parquet(spark, tmp_path):
+    """Plain parquet left at a fold sink's state path (a pre-txn sketch
+    or day-partitioned rollup) is refused with the migration named, and
+    stays as it was: a first txn commit there would shadow its rows."""
+    from tdataframe_spark.functions.sketches import cms_build
+    from tdataframe_spark.ops.rollup import build_rollup
+    from tdataframe_spark.sources.txn import is_txn_table
+    from tdataframe_spark.streaming import stream_cms_refresh, stream_from_files
+
+    ev = _events(spark)
+    src = str(tmp_path / "src")
+    ev.write.parquet(src)
+    path = str(tmp_path / "cms")
+    cms_build(ev, "event_type", depth=3, width=64).write.parquet(f"{path}/sketch")
+    stream = stream_from_files(spark, src, ev.schema)
+    with pytest.raises(Exception, match="migrate it with txn_write"):
+        stream_cms_refresh(
+            stream.select("event_type"), path, str(tmp_path / "ckpt"),
+            "event_type", depth=3, width=64,
+        )
+    assert not is_txn_table(f"{path}/sketch")
+
+    rollup = str(tmp_path / "rollup")
+    ev.withColumn("day", F.lit(0)).write.partitionBy("day").parquet(rollup)
+    with pytest.raises(ValueError, match="migrate it with txn_write"):
+        build_rollup(ev, rollup, group_cols=["event_type"])
+    assert not is_txn_table(rollup)
+
+
+def test_rollup_sink_survives_crash_before_checkpoint_commit(spark, tmp_path):
     from tdataframe_spark.ops.rollup import build_rollup, serve_rollup
     from tdataframe_spark.sources.txn import txn_latest
     from tdataframe_spark.streaming import stream_from_files, stream_rollup_refresh
@@ -130,7 +193,7 @@ def test_rollup_txn_sink_survives_crash_before_checkpoint_commit(spark, tmp_path
     replayed = _crash_before_checkpoint_commit(ckpt)
     assert m_before["meta"]["batch_id"] == replayed  # fence rides the commit
 
-    run()  # restart: the commit-meta fence must skip the replayed batch
+    run()  # restart: the watermark must skip the replayed batch
     assert served(path) == served(full), "replayed batch re-folded the rollup"
     v_after, _ = txn_latest(path)
     assert v_after == v_before, "replay must not create a new commit"
@@ -170,9 +233,7 @@ def test_upsert_txn_sink_is_exactly_once_and_snapshot_isolated(spark, tmp_path):
         stream = stream_from_files(
             spark, src, batch_view.schema, max_files_per_trigger=1
         )
-        stream_upsert_to_parquet(
-            stream, path, ckpt, keys=["k"], order_col="ver", txn=True
-        )
+        stream_upsert_to_parquet(stream, path, ckpt, keys=["k"], order_col="ver")
 
     run()
     final = {r["k"]: r["v"] for r in txn_read(spark, path).collect()}
@@ -186,8 +247,16 @@ def test_upsert_txn_sink_is_exactly_once_and_snapshot_isolated(spark, tmp_path):
 
     assert txn_app_version(path, f"cdc_upsert:{_ckpt_id(ckpt)}") == 2
     _crash_before_checkpoint_commit(ckpt)
-    run()  # replay fenced by commit meta
+    run()  # replay fenced by the watermark
     assert {r["k"]: r["v"] for r in txn_read(spark, path).collect()} == final
+    assert txn_latest(path)[0] == v_before
+
+    # a foreign checkpoint's batch ids would collide with the owner's
+    other = stream_from_files(spark, src, batch_view.schema, max_files_per_trigger=1)
+    with pytest.raises(Exception, match="owned by checkpoint"):
+        stream_upsert_to_parquet(
+            other, path, str(tmp_path / "other_ckpt"), keys=["k"], order_col="ver"
+        )
     assert txn_latest(path)[0] == v_before
 
     # snapshot isolation: version 1 (first micro-batch's merge) is intact
@@ -197,13 +266,10 @@ def test_upsert_txn_sink_is_exactly_once_and_snapshot_isolated(spark, tmp_path):
 def test_stream_upsert_delete_arm(spark, tmp_path):
     """Streaming MERGE with tombstones: a CDC stream carrying updates,
     inserts, AND deletes (delete_when) applies each micro-batch as one
-    atomic commit — deleted keys vanish, unmatched tombstones no-op,
-    and the non-txn mode rejects delete_when loudly."""
+    atomic commit — deleted keys vanish, unmatched tombstones no-op."""
     import glob
     import os as _os
     import shutil
-
-    import pytest as _pytest
 
     from tdataframe_spark.sources.txn import txn_read, txn_write
     from tdataframe_spark.streaming import (
@@ -237,16 +303,10 @@ def test_stream_upsert_delete_arm(spark, tmp_path):
     schema = spark.read.parquet(src).schema
     stream = stream_from_files(spark, src, schema, max_files_per_trigger=1)
     stream_upsert_to_parquet(
-        stream, path, ckpt, keys=["k"], order_col="ver",
-        txn=True, delete_when="del = 1",
+        stream, path, ckpt, keys=["k"], order_col="ver", delete_when="del = 1",
     )
     got = {r["k"]: r["v"] for r in txn_read(spark, path).collect()}
     assert got == {1: "a2", 3: "c", 4: "d"}  # 2 deleted, 99 no-op
-
-    with _pytest.raises(ValueError, match="txn=True"):
-        stream_upsert_to_parquet(
-            stream, path, ckpt, keys=["k"], delete_when="del = 1"
-        )
 
 
 def test_phash_index_stream_is_exactly_once(spark, tmp_path):
@@ -312,7 +372,7 @@ def test_phash_index_stream_is_exactly_once(spark, tmp_path):
     replayed = _crash_before_checkpoint_commit(ckpt)
     assert m_before["meta"]["batch_id"] == replayed  # fence rides the commit
 
-    run()  # restart: the commit-meta fence must skip the replayed batch
+    run()  # restart: the watermark must skip the replayed batch
     assert index_rows() == oneshot, "replayed batch double-appended"
     v_after, _ = txn_latest(idx)
     assert v_after == v_before, "replay must not create a new commit"

@@ -2,8 +2,6 @@
 decimal partials), and a refresh touches only the day partitions its batch
 covers."""
 
-import os
-
 from pyspark.sql import functions as F
 
 from tdataframe_spark.ops.rollup import (
@@ -14,6 +12,7 @@ from tdataframe_spark.ops.rollup import (
     serve_rollup,
 )
 from tdataframe_spark.sources.parquet import read_table
+from tdataframe_spark.sources.txn import txn_latest
 
 SF = "/root/testdata/sf0.001"
 
@@ -59,8 +58,10 @@ def test_refresh_rewrites_only_touched_days(spark, tmp_path):
     untouched, touched = days[0], days[-1]
 
     def files_of(day):
-        d = os.path.join(path, f"day={day}")
-        return {f: os.path.getmtime(os.path.join(d, f)) for f in os.listdir(d)}
+        return {
+            f["path"] for f in txn_latest(path)[1]["files"]
+            if f["partition"]["day"] == str(day)
+        }
 
     before_untouched, before_touched = files_of(untouched), files_of(touched)
     # materialize the batch: limit() on an unordered frame is evaluated
@@ -72,7 +73,7 @@ def test_refresh_rewrites_only_touched_days(spark, tmp_path):
     batch = spark.createDataFrame(batch_rows, ev.schema)
     assert refresh_rollup(batch, path, group_cols=["event_type"]) == [touched]
     assert files_of(untouched) == before_untouched  # pruned: never rewritten
-    assert files_of(touched) != before_touched
+    assert files_of(touched) and not files_of(touched) & before_touched
 
     # and the merged state still serves the exact combined aggregate
     full = str(tmp_path / "full2")
@@ -103,8 +104,8 @@ def test_stream_rollup_refresh_matches_batch(spark, tmp_path):
     """Drain a file stream through the rollup sink in several micro-batches;
     the served aggregate must equal a one-shot batch build. A DIFFERENT
     checkpoint lineage must be refused loudly: its batch ids would collide
-    with the owner's markers (silent skip) or re-fold the whole source
-    (double count) — both silent corruptions before the ownership check."""
+    with the owner's watermark (silent skip) or re-fold the whole source
+    (double count) — both silent corruptions without the ownership check."""
     import pytest
 
     from tdataframe_spark.streaming import stream_from_files, stream_rollup_refresh

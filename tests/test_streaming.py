@@ -327,6 +327,7 @@ def test_stream_upsert_cdc_merge(spark, tmp_path):
     """foreachBatch CDC upsert: a second drain with the same checkpoint
     merges only the new file — same-key rows replaced (last-wins by version
     inside a batch), new keys appended, untouched keys preserved."""
+    from tdataframe_spark.sources.txn import txn_read
     from tdataframe_spark.streaming import stream_upsert_to_parquet
 
     src = tmp_path / "cdc_in"
@@ -343,14 +344,14 @@ def test_stream_upsert_cdc_merge(spark, tmp_path):
     write_batch("b1", [(1, "a", 1), (2, "b", 1)])
     stream = spark.readStream.schema(schema).parquet(f"{src}/*")
     stream_upsert_to_parquet(stream, out, ckpt, keys=["k"], order_col="ver")
-    got = {r["k"]: (r["v"], r["ver"]) for r in spark.read.parquet(out).collect()}
+    got = {r["k"]: (r["v"], r["ver"]) for r in txn_read(spark, out).collect()}
     assert got == {1: ("a", 1), 2: ("b", 1)}
 
     # second CDC batch: update k=2, insert k=3 (with an in-batch stale dup)
     write_batch("b2", [(2, "b2", 2), (3, "c_old", 1), (3, "c", 2)])
     stream2 = spark.readStream.schema(schema).parquet(f"{src}/*")
     stream_upsert_to_parquet(stream2, out, ckpt, keys=["k"], order_col="ver")
-    got = {r["k"]: (r["v"], r["ver"]) for r in spark.read.parquet(out).collect()}
+    got = {r["k"]: (r["v"], r["ver"]) for r in txn_read(spark, out).collect()}
     assert got == {1: ("a", 1), 2: ("b2", 2), 3: ("c", 2)}
 
 
@@ -433,36 +434,6 @@ def test_transform_with_state_running_totals(spark, stream_dir):
         q.stop()
 
 
-def test_stream_upsert_recovers_interrupted_swap(spark, tmp_path):
-    """A crash between the swap's renames leaves the table aside as
-    __old__; the next merge must restore it before merging (the
-    rmtree-then-rename shape lost the whole table in that window)."""
-    import os
-
-    from tdataframe_spark.streaming import stream_upsert_to_parquet
-
-    src = tmp_path / "cdc_in"
-    src.mkdir()
-    out = str(tmp_path / "table")
-    schema = "k int, v string, ver int"
-    spark.createDataFrame([(1, "a", 1)], schema).coalesce(1).write.parquet(
-        str(src / "b1")
-    )
-    stream = spark.readStream.schema(schema).parquet(f"{src}/*")
-    stream_upsert_to_parquet(stream, out, str(tmp_path / "ck1"), keys=["k"], order_col="ver")
-
-    # simulate the crash window: table renamed aside, new copy never landed
-    os.rename(out, f"{out}.__old__")
-    spark.createDataFrame([(2, "b", 1)], schema).coalesce(1).write.parquet(
-        str(src / "b2")
-    )
-    stream2 = spark.readStream.schema(schema).parquet(f"{src}/*")
-    stream_upsert_to_parquet(stream2, out, str(tmp_path / "ck1"), keys=["k"], order_col="ver")
-    got = {r["k"]: r["v"] for r in spark.read.parquet(out).collect()}
-    assert got == {1: "a", 2: "b"}  # k=1 recovered, not lost
-    assert not os.path.exists(f"{out}.__old__")
-
-
 def test_stateful_sessionize_string_keys_and_custom_name(spark, stream_dir, tmp_path):
     """The state operator must carry the caller's key column name and type
     (string user ids crashed the long-typed output schema)."""
@@ -496,10 +467,10 @@ def test_stateful_sessionize_string_keys_and_custom_name(spark, stream_dir, tmp_
 
 def test_stream_cms_refresh_matches_batch_sketch(spark, stream_dir, tmp_path):
     """The streamed sketch must equal a one-shot batch build over the
-    same data EXACTLY (CMS merge law), and a fresh-checkpoint restart
-    over the same input must replay as no-ops (applied-batch ledger) —
-    the estimates stay identical instead of doubling."""
+    same data EXACTLY (CMS merge law). Replay and foreign-checkpoint
+    refusal: test_exactly_once.py."""
     from tdataframe_spark.functions.sketches import cms_build, cms_query
+    from tdataframe_spark.sources.txn import txn_read
     from tdataframe_spark.streaming import stream_cms_refresh, stream_from_files
 
     batch = spark.read.parquet(stream_dir)
@@ -517,7 +488,7 @@ def test_stream_cms_refresh_matches_batch_sketch(spark, stream_dir, tmp_path):
     streamed = {
         r["event_type"]: r["est"]
         for r in cms_query(
-            spark.read.parquet(f"{path}/sketch"), items, "event_type"
+            txn_read(spark, f"{path}/sketch"), items, "event_type"
         ).collect()
     }
     oneshot = {
@@ -529,66 +500,30 @@ def test_stream_cms_refresh_matches_batch_sketch(spark, stream_dir, tmp_path):
         ).collect()
     }
     assert streamed == oneshot and sum(streamed.values()) > 0
-    # replay from the SAME checkpoint: availableNow reprocesses nothing new
-    stream2 = stream_from_files(
-        spark, stream_dir, batch.schema, max_files_per_trigger=2
-    )
-    stream_cms_refresh(
-        stream2.select("event_type"), path, ckpt, "event_type",
-        depth=3, width=64,
-    )
-    after = {
-        r["event_type"]: r["est"]
-        for r in cms_query(
-            spark.read.parquet(f"{path}/sketch"), items, "event_type"
-        ).collect()
-    }
-    assert after == streamed
-    # a DIFFERENT checkpoint refuses to fold into owned state
-    import pytest as _pt
-
-    stream3 = stream_from_files(
-        spark, stream_dir, batch.schema, max_files_per_trigger=2
-    )
-    with _pt.raises(Exception, match="owned by checkpoint"):
-        stream_cms_refresh(
-            stream3.select("event_type"), path, str(tmp_path / "other_ckpt"),
-            "event_type", depth=3, width=64,
-        )
 
 
 def test_stream_hll_refresh_matches_batch_estimates(spark, stream_dir, tmp_path):
     """The streamed per-group sketch table must estimate exactly like a
     one-shot grouped build over the same data (identical value sets at
-    this cardinality), replay from the same checkpoint must be a no-op,
-    and a foreign checkpoint must be refused."""
-    import pytest as _pt
-
+    this cardinality). Replay and foreign-checkpoint refusal:
+    test_exactly_once.py."""
     from tdataframe_spark.functions.sketches import hll_estimate
+    from tdataframe_spark.sources.txn import txn_read
     from tdataframe_spark.streaming import stream_from_files, stream_hll_refresh
 
     batch = spark.read.parquet(stream_dir)
     path = str(tmp_path / "hll_state")
-    ckpt = str(tmp_path / "hll_ckpt")
-
-    def run(ck):
-        stream_hll_refresh(
-            stream_from_files(spark, stream_dir, batch.schema, max_files_per_trigger=2)
-            .select("event_type", "user_id"),
-            path, ck, "user_id", group_cols=["event_type"],
-        )
-
-    run(ckpt)
-
-    def estimates():
-        return {
-            r["event_type"]: r["e"]
-            for r in spark.read.parquet(f"{path}/sketches")
-            .select("event_type", hll_estimate(F.col("sketch")).alias("e"))
-            .collect()
-        }
-
-    got = estimates()
+    stream_hll_refresh(
+        stream_from_files(spark, stream_dir, batch.schema, max_files_per_trigger=2)
+        .select("event_type", "user_id"),
+        path, str(tmp_path / "hll_ckpt"), "user_id", group_cols=["event_type"],
+    )
+    got = {
+        r["event_type"]: r["e"]
+        for r in txn_read(spark, f"{path}/sketches")
+        .select("event_type", hll_estimate(F.col("sketch")).alias("e"))
+        .collect()
+    }
     from tdataframe_spark.functions.sketches import grouped_distinct_sketches
 
     want = {
@@ -607,41 +542,28 @@ def test_stream_hll_refresh_matches_batch_estimates(spark, stream_dir, tmp_path)
     for k in exact:  # both paths within HLL 2-sigma of truth
         for est in (got[k], want[k]):
             assert abs(est - exact[k]) / max(exact[k], 1) < 0.06, (k, est, exact[k])
-    run(ckpt)  # same checkpoint: availableNow replays nothing
-    assert estimates() == got
-    with _pt.raises(Exception, match="owned by checkpoint"):
-        run(str(tmp_path / "other_ckpt"))
 
 
 def test_stream_topk_refresh_matches_batch(spark, stream_dir, tmp_path):
     """The streamed leaderboard must equal the one-shot batch top-k over
-    all data, survive a same-checkpoint replay untouched, and refuse a
-    foreign checkpoint."""
-    import pytest as _pt
-
+    all data. Replay and foreign-checkpoint refusal:
+    test_exactly_once.py."""
     from tdataframe_spark.operators.windows import top_per_group
+    from tdataframe_spark.sources.txn import txn_read
     from tdataframe_spark.streaming import stream_from_files, stream_topk_refresh
 
     batch = spark.read.parquet(stream_dir)
     path = str(tmp_path / "lb_state")
-    ckpt = str(tmp_path / "lb_ckpt")
-
-    def run(ck):
-        stream_topk_refresh(
-            stream_from_files(spark, stream_dir, batch.schema, max_files_per_trigger=2)
-            .select("event_type", "event_id", "value"),
-            path, ck, ["event_type"], "value", k=5, tie_cols=["event_id"],
-        )
-
-    run(ckpt)
-
-    def state():
-        return {
-            (r["event_type"], r["event_id"], r["value"])
-            for r in spark.read.parquet(f"{path}/topk").collect()
-        }
-
-    got = state()
+    stream_topk_refresh(
+        stream_from_files(spark, stream_dir, batch.schema, max_files_per_trigger=2)
+        .select("event_type", "event_id", "value"),
+        path, str(tmp_path / "lb_ckpt"), ["event_type"], "value", k=5,
+        tie_cols=["event_id"],
+    )
+    got = {
+        (r["event_type"], r["event_id"], r["value"])
+        for r in txn_read(spark, f"{path}/topk").collect()
+    }
     want = {
         (r["event_type"], r["event_id"], r["value"])
         for r in top_per_group(
@@ -652,18 +574,14 @@ def test_stream_topk_refresh_matches_batch(spark, stream_dir, tmp_path):
         ).collect()
     }
     assert got == want and len(got) > 0
-    run(ckpt)  # replay: no-op
-    assert state() == got
-    with _pt.raises(Exception, match="owned by checkpoint"):
-        run(str(tmp_path / "other"))
 
 
 def test_stream_dds_refresh_matches_batch_sketch(spark, stream_dir, tmp_path):
     """The streamed quantile sketch must equal a one-shot batch build
-    over the same data EXACTLY (DDSketch buckets are plain counts), and
-    a restart over the same checkpoint must replay as no-ops — the
-    percentiles stay identical instead of drifting."""
+    over the same data EXACTLY (DDSketch buckets are plain counts).
+    Replay and foreign-checkpoint refusal: test_exactly_once.py."""
     from tdataframe_spark.functions.sketches import dds_build, dds_quantiles
+    from tdataframe_spark.sources.txn import txn_read
     from tdataframe_spark.streaming import stream_dds_refresh, stream_from_files
 
     batch = spark.read.parquet(stream_dir)
@@ -678,9 +596,7 @@ def test_stream_dds_refresh_matches_batch_sketch(spark, stream_dir, tmp_path):
     qs = [0.25, 0.5, 0.95]
     streamed = {
         r["q"]: r["est"]
-        for r in dds_quantiles(
-            spark.read.parquet(f"{path}/sketch"), qs
-        ).collect()
+        for r in dds_quantiles(txn_read(spark, f"{path}/sketch"), qs).collect()
     }
     oneshot = {
         r["q"]: r["est"]
@@ -689,17 +605,3 @@ def test_stream_dds_refresh_matches_batch_sketch(spark, stream_dir, tmp_path):
         ).collect()
     }
     assert streamed == oneshot and len(streamed) == 3
-    # replay from the SAME checkpoint: availableNow reprocesses nothing
-    stream2 = stream_from_files(
-        spark, stream_dir, batch.schema, max_files_per_trigger=2
-    )
-    stream_dds_refresh(
-        stream2.select("value"), path, ckpt, "value", alpha=0.02
-    )
-    after = {
-        r["q"]: r["est"]
-        for r in dds_quantiles(
-            spark.read.parquet(f"{path}/sketch"), qs
-        ).collect()
-    }
-    assert after == streamed

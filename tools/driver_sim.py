@@ -10,9 +10,10 @@ registry entries — the scoped re-verify after touching one operator
 
 Mirrors tests/test_oracle_parity.py but covers the driver's scale and the
 FULL registry (the external driver only checks the first 50 entries)."""
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import duckdb
 import pandas as pd

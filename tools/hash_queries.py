@@ -5,9 +5,10 @@ that an optimization left every declared query's rows bit-identical
     python tools/hash_queries.py q1,q2,... [sf_dir]
 """
 import hashlib
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as em
 from tdataframe_spark.session import get_spark
